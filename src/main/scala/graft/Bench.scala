@@ -337,7 +337,10 @@ object Bench {
     val results = selected.map { case (name, _) => name -> best(name) }
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
+    // failed queries (-1) stay out of the sum but are counted, so a
+    // failure never reads as a faster total
     val total = results.map(_._2).filter(_ >= 0).sum
+    val nFailed = results.count(_._2 < 0)
     // ANN recall@3 per index vs exact kNN on this SF's embeddings — a
     // tuning regression that tanks recall shows up in the round record,
     // not only in SimilaritySpec's floors. -1 marks a failed measurement.
@@ -531,7 +534,7 @@ object Bench {
         if (entries.isEmpty) ""
         else s""","scale_trend":${entries.mkString("{", ",", "}")}"""
       }
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"recall_at_3":$rc$filesRead$storedPhases$scaleTrend,"sf":"$sfDir"}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","n_failed":$nFailed,"queries":$qs,"recall_at_3":$rc$filesRead$storedPhases$scaleTrend,"sf":"$sfDir"}"""
     // Full JSON both on stdout and in a file, then the headline total on its
     // own LAST line: a tail-truncated capture still recovers the total, and
     // the file recovers everything.
@@ -547,7 +550,7 @@ object Bench {
       catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"[bench] could not write $f: ${e.getMessage}") }
     }
-    println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","n_failed":$nFailed,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -40,20 +40,14 @@ object ColumnBridge {
   * frame — correct-but-pessimistic, and irrelevant for node-keyed
   * shuffle joins. */
 object PlanBridge {
-  /** Round-16 (optimization guide §2.4 "remove shuffles outright"): the
-    * rebuilt leaf PRESERVES the origin's physical `outputPartitioning`
-    * and `outputOrdering` (what `Dataset.localCheckpoint` itself does,
-    * via `LogicalRDD.fromDataset`) while still DROPPING the origin's
-    * estimated statistics (`originStats = None` — the whole point of
-    * this wrapper, see above). An iterative round that joins or
-    * re-aggregates the previous round's state on the SAME key then
-    * reuses the carried hash partitioning instead of re-exchanging a
-    * frame that is already laid out correctly — one fewer Exchange
-    * (and, under AQE, one fewer stage-job round-trip) per consumer per
-    * round across the whole iterative family. The claimed partitioning
-    * is exactly what Spark reported for the same physical RDD, so
-    * correctness is by construction; a consumer keyed differently
-    * still exchanges as before. */
+  /** Rebuilds `df` as a fresh `LogicalRDD` leaf over its InternalRow RDD
+    * via `internalCreateDataFrame`: default leaf statistics, and no
+    * claimed `outputPartitioning` / `outputOrdering`. A variant that kept
+    * the origin's physical partitioning and ordering (so a same-key round
+    * could skip an exchange) was measured and rejected: job counts were
+    * identical on q95, q76, d06, q142, q64 and q133, because the carried
+    * partitioning never satisfied a downstream requirement
+    * (OPTIMIZATION_r16.md, "statsFlatLeaf partitioning preservation"). */
   def statsFlatLeaf(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
     ds.sparkSession.internalCreateDataFrame(

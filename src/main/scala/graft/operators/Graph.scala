@@ -54,8 +54,8 @@ object Graph {
     * Unlike [[Dedup.duplicateClusters]] there is no per-round
     * convergence action, so rounds stay LAZY — one job executes several
     * chained rounds — and lineage is truncated only every
-    * `checkpointEvery` rounds (`localCheckpoint` + unpersist) to keep
-    * the plan and storage bounded for large iteration counts.
+    * `checkpointEvery` rounds ([[Iterate.chain]]) to keep the plan and
+    * storage bounded for large iteration counts.
     *
     * `convergeTol` (default None = the lazy fixed-`iterations` lockstep
     * mode above, byte-identical to every prior round) switches on
@@ -99,7 +99,7 @@ object Graph {
     // already-stationary seed stops after ONE verification round — the
     // append-cheaply story of [[updateConnectedComponents]] for rank.
     // Nodes absent from the seed (appended subgraph) start at 1.0.
-    var ranks = initRanks match {
+    val ranks0 = initRanks match {
       case None => nodes.withColumn("r", lit(1.0))
       case Some(seed) => nodes.join(
           seed.select(col("node").cast("long").as("node"),
@@ -107,10 +107,7 @@ object Graph {
           Seq("node"), "left_outer")
         .select(col("node"), coalesce(col("_seed"), lit(1.0)).as("r"))
     }
-    var lastCkpt: Option[DataFrame] = None
-    var i = 0
-    var converged = false
-    while (i < iterations && !converged) {
+    val step = (ranks: DataFrame, _: Int) => {
       val contribs = withDeg.join(ranks, col("src") === col("node"))
         .groupBy(col("dst"))
         .agg(sum((col("r") / col("deg").cast("double"))
@@ -135,41 +132,23 @@ object Graph {
           ranks.join(dangling, Seq("node"))
             .agg(sum(col("r").cast(DecimalType(28, 12))).as("_dsum"))))
       val newRank = round(lit(1.0 - damping) + lit(damping) * inflow, roundTo)
-      i += 1
       convergeTol match {
-        case Some(tol) =>
-          val obs = org.apache.spark.sql.Observation()
-          val next = withDang.select(col("node"), newRank.as("r"), col("_prev"))
-            .observe(obs, max(abs(col("r") - col("_prev"))).as("delta"))
-            .select(col("node"), col("r"))
-            .localCheckpoint(true) // eager: one job per round, Δ collected on it
-          val delta = Option(obs.get("delta"))
-            .map(_.asInstanceOf[Double]).getOrElse(0.0)
-          lastCkpt.foreach(_.unpersist())
-          lastCkpt = Some(next)
-          ranks = flat(next)
-          converged = delta <= tol
-        case None =>
-          var next = withDang.select(col("node"), newRank.as("r"))
-          if (i % checkpointEvery == 0 && i < iterations) {
-            // truncate lineage; only now does a job run
-            val ck = next.localCheckpoint(true)
-            lastCkpt.foreach(_.unpersist())
-            lastCkpt = Some(ck)
-            next = flat(ck)
-          }
-          ranks = next
+        case Some(_) => withDang.select(col("node"), newRank.as("r"), col("_prev"))
+        case None => withDang.select(col("node"), newRank.as("r"))
       }
     }
-    ConvergenceGauge.lastRounds = i
+    // fixed mode: lazy rounds, checkpointed every `checkpointEvery`;
+    // convergence mode: one observed job per round, Δ collected on it
+    val run = convergeTol match {
+      case Some(tol) => Iterate.until(ranks0, iterations,
+        max(abs(col("r") - col("_prev"))), 0.0)(step)(_ <= tol)
+      case None => Iterate.chain(ranks0, iterations, checkpointEvery)(step)
+    }
     // one final materialization so every intermediate block (withDeg,
     // nodes, the periodic checkpoints) can be freed NOW — the lazy
     // rounds in between never touched the scheduler
-    val result = ranks.localCheckpoint(true)
-    lastCkpt.foreach(_.unpersist())
-    withDeg.unpersist()
-    nodes.unpersist()
-    dangling.unpersist()
+    val result = run.finish()
+    Iterate.release(withDeg, nodes, dangling)
     // callers own the returned checkpointed frame's lifetime
     result.select(col("node"), col("r").as("rank"))
   }
@@ -213,10 +192,8 @@ object Graph {
       col("node") === col("src"), "left_anti").localCheckpoint(true)
     val hasDangling = !dangling.isEmpty
     val nNodes = nodes.count()
-    var ranks = nodes.withColumn("r", lit(1.0))
-    var lastCkpt: Option[DataFrame] = None
-    var i = 0
-    while (i < iterations) {
+    val run = Iterate.chain(nodes.withColumn("r", lit(1.0)), iterations,
+        checkpointEvery) { (ranks, _) =>
       val contribs = withW.join(ranks, col("src") === col("node"))
         .groupBy(col("dst"))
         .agg(sum((col("r") * col("w").cast("double") / col("wsum").cast("double"))
@@ -231,22 +208,11 @@ object Graph {
         else joined.crossJoin(broadcast(
           ranks.join(dangling, Seq("node"))
             .agg(sum(col("r").cast(DecimalType(28, 12))).as("_dsum"))))
-      var next = withDang.select(col("node"),
+      withDang.select(col("node"),
         round(lit(1.0 - damping) + lit(damping) * inflow, roundTo).as("r"))
-      i += 1
-      if (i % checkpointEvery == 0 && i < iterations) {
-        val ck = next.localCheckpoint(true)
-        lastCkpt.foreach(_.unpersist())
-        lastCkpt = Some(ck)
-        next = flat(ck)
-      }
-      ranks = next
     }
-    val result = ranks.localCheckpoint(true)
-    lastCkpt.foreach(_.unpersist())
-    withW.unpersist()
-    nodes.unpersist()
-    dangling.unpersist()
+    val result = run.finish()
+    Iterate.release(withW, nodes, dangling)
     result.select(col("node"), col("r").as("rank"))
   }
 
@@ -289,11 +255,7 @@ object Graph {
     val hasDangling = !dangling.isEmpty
     val tele = when(col("node").isInCollection(srcSet),
       lit(1.0 / srcSet.length)).otherwise(lit(0.0))
-    var ranks = nodes.withColumn("r", tele)
-    var lastCkpt: Option[DataFrame] = None
-    var i = 0
-    var converged = false
-    while (i < iterations && !converged) {
+    val step = (ranks: DataFrame, _: Int) => {
       val contribs = withDeg.join(ranks, col("src") === col("node"))
         .groupBy(col("dst"))
         .agg(sum((col("r") / col("deg").cast("double"))
@@ -313,44 +275,27 @@ object Graph {
           ranks.join(dangling, Seq("node"))
             .agg(sum(col("r").cast(DecimalType(28, 12))).as("_dsum"))))
       val newRank = round(lit(1.0 - damping) * tele + lit(damping) * inflow, roundTo)
-      i += 1
       convergeTol match {
-        case Some(tol) =>
-          val obs = org.apache.spark.sql.Observation()
-          val next = withDang.select(col("node"), newRank.as("r"), col("_prev"))
-            .observe(obs, max(abs(col("r") - col("_prev"))).as("delta"))
-            .select(col("node"), col("r"))
-            .localCheckpoint(true)
-          val delta = Option(obs.get("delta"))
-            .map(_.asInstanceOf[Double]).getOrElse(0.0)
-          lastCkpt.foreach(_.unpersist())
-          lastCkpt = Some(next)
-          ranks = flat(next)
-          converged = delta <= tol
-        case None =>
-          var next = withDang.select(col("node"), newRank.as("r"))
-          if (i % checkpointEvery == 0 && i < iterations) {
-            val ck = next.localCheckpoint(true)
-            lastCkpt.foreach(_.unpersist())
-            lastCkpt = Some(ck)
-            next = flat(ck)
-          }
-          ranks = next
+        case Some(_) => withDang.select(col("node"), newRank.as("r"), col("_prev"))
+        case None => withDang.select(col("node"), newRank.as("r"))
       }
     }
-    ConvergenceGauge.lastRounds = i
-    val result = ranks.localCheckpoint(true)
-    lastCkpt.foreach(_.unpersist())
-    withDeg.unpersist()
-    nodes.unpersist()
-    dangling.unpersist()
+    val ranks0 = nodes.withColumn("r", tele)
+    val run = convergeTol match {
+      case Some(tol) => Iterate.until(ranks0, iterations,
+        max(abs(col("r") - col("_prev"))), 0.0)(step)(_ <= tol)
+      case None => Iterate.chain(ranks0, iterations, checkpointEvery)(step)
+    }
+    val result = run.finish()
+    Iterate.release(withDeg, nodes, dangling)
     result.select(col("node"), col("r").as("rank"))
   }
 
-  /** Test-visible count of rounds the last [[pageRank]] /
-    * [[personalizedPageRank]] call on this JVM actually ran — the
-    * convergence specs pin that an already-converged graph stops early
-    * (meaningful in local mode; same contract as the other gauges). */
+  /** Test-visible count of rounds the last [[Iterate]] loop on this JVM
+    * actually ran (e.g. a [[pageRank]] / [[personalizedPageRank]] /
+    * [[kCore]] call) — the convergence specs pin that an
+    * already-converged graph stops early (meaningful in local mode; same
+    * contract as the other gauges). */
   private[operators] object ConvergenceGauge {
     @volatile var lastRounds: Int = -1
   }
@@ -419,14 +364,14 @@ object Graph {
   def triangleCounts(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
     val (lazyOut, oriented) = triangleCountsLazy(edges, srcCol, dstCol)
     val out = lazyOut.localCheckpoint(true) // output-sized (one row per triangle node)
-    oriented.unpersist()
+    Iterate.release(oriented)
     out
   }
 
   /** [[triangleCounts]] before its final eager materialization: returns
     * (result with full lineage, the checkpointed oriented edge list the
-    * caller must unpersist) so plan-quality specs can assert the wedge
-    * join's physical shape. */
+    * caller must [[Iterate.release]]) so plan-quality specs can assert
+    * the wedge join's physical shape. */
   private[graft] def triangleCountsLazy(edges: DataFrame, srcCol: String,
       dstCol: String): (DataFrame, DataFrame) = {
     val und = edges
@@ -507,29 +452,16 @@ object Graph {
     // round's join probes this same block
     val und = canon.unionAll(canon.select(col("b").as("a"), col("a").as("b")))
       .localCheckpoint(true)
-    var labels = und.select(col("a").as("node")).distinct()
+    val labels0 = und.select(col("a").as("node")).distinct()
       .withColumn("lbl", col("node"))
-    var lastCkpt: Option[DataFrame] = None
-    var i = 0
-    while (i < rounds) {
-      val counts = und.join(labels, col("b") === col("node"))
+    val result = Iterate.chain(labels0, rounds, checkpointEvery) { (labels, _) =>
+      und.join(labels, col("b") === col("node"))
         .groupBy(col("a"), col("lbl")).agg(count(lit(1)).as("cnt"))
-      var next = counts
         .groupBy(col("a"))
         .agg(min(struct((-col("cnt")).as("nc"), col("lbl").as("l"))).as("m"))
         .select(col("a").as("node"), col("m.l").as("lbl"))
-      i += 1
-      if (i % checkpointEvery == 0 && i < rounds) {
-        val ck = next.localCheckpoint(true)
-        lastCkpt.foreach(_.unpersist())
-        lastCkpt = Some(ck)
-        next = flat(ck)
-      }
-      labels = next
-    }
-    val result = labels.localCheckpoint(true)
-    lastCkpt.foreach(_.unpersist())
-    und.unpersist()
+    }.finish()
+    Iterate.release(und)
     result.select(col("node"), col("lbl").as("label"))
   }
 
@@ -568,18 +500,18 @@ object Graph {
   def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
       rounds: Int = 8, checkpointEvery: Int = 1,
       stopEarly: Boolean = false): DataFrame = {
-    val (lazyOut, lastCkpt) =
+    val (lazyOut, held) =
       kCoreLazy(edges, srcCol, dstCol, k, rounds, checkpointEvery, stopEarly)
     // one final materialization frees every intermediate block NOW
     val out = lazyOut.localCheckpoint(true)
-    lastCkpt.foreach(_.unpersist())
+    held.foreach(Iterate.release(_))
     out
   }
 
   /** [[kCore]] before its final eager materialization: returns (result
     * with full lineage, the last mid-loop checkpoint the caller must
-    * unpersist). Exists so plan-quality specs can assert the peel
-    * rounds' physical shape — `localCheckpoint` truncates lineage to a
+    * [[Iterate.release]]). Exists so plan-quality specs can assert the
+    * peel rounds' physical shape — `localCheckpoint` truncates lineage to a
     * `Scan ExistingRDD`, hiding the joins (the
     * [[Dedup.minhashCandidatesLazy]] pattern). */
   private[graft] def kCoreLazy(edges: DataFrame, srcCol: String, dstCol: String,
@@ -596,72 +528,37 @@ object Graph {
         greatest(col(srcCol), col(dstCol)).as("b"))
       .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
       .distinct()
-    // stopEarly needs the round-0 edge count as the comparison base; the
-    // observation rides the materialization that happens regardless
-    var prevEdges = -1L
-    var und =
-      if (stopEarly) {
-        val obs = org.apache.spark.sql.Observation()
-        val c = canon.observe(obs, count(lit(1)).as("n")).localCheckpoint(true)
-        prevEdges = Option(obs.get("n")).map(_.asInstanceOf[Long]).getOrElse(0L)
-        c
-      } else canon.localCheckpoint(true)
     def degrees(e: DataFrame): DataFrame =
       e.select(col("a").as("node")).unionAll(e.select(col("b").as("node")))
         .groupBy(col("node")).agg(count(lit(1)).as("dg"))
-    var lastCkpt: Option[DataFrame] = Some(und)
-    var i = 0
-    var converged = stopEarly && prevEdges == 0L
-    while (i < rounds && !converged) {
+    val peel = (und: DataFrame, _: Int) => {
       val keep = degrees(und).filter(col("dg") >= k).select(col("node"))
-      val next = und
+      und
         .join(keep.select(col("node").as("a")), Seq("a"), "left_semi")
         .join(keep.select(col("node").as("b")), Seq("b"), "left_semi")
         .select(col("a"), col("b"))
-      i += 1
-      if (stopEarly) {
-        // every node in the edge frame has >= 1 edge, so an unchanged
-        // edge count means the round dropped nobody — the fixpoint
-        val obs = org.apache.spark.sql.Observation()
-        und = next.observe(obs, count(lit(1)).as("n")).localCheckpoint(true)
-        val n = Option(obs.get("n")).map(_.asInstanceOf[Long]).getOrElse(0L)
-        lastCkpt.foreach(_.unpersist())
-        lastCkpt = Some(und)
-        converged = n == prevEdges
-        prevEdges = n
-      } else {
-        und = next
-        if (i % checkpointEvery == 0 && i < rounds) {
-          und = und.localCheckpoint(true)
-          lastCkpt.foreach(_.unpersist())
-          lastCkpt = Some(und)
-        }
-      }
     }
-    ConvergenceGauge.lastRounds = i
-    (degrees(und).select(col("node"), col("dg").as("degree")), lastCkpt)
+    // the peel rounds read the raw checkpoints (no stats-flat wrap)
+    val run = if (stopEarly) {
+      // the round-0 edge count is the comparison base; its observation
+      // rides the materialization that happens regardless. Every node in
+      // the edge frame has >= 1 edge, so an unchanged edge count means
+      // the round dropped nobody — the fixpoint
+      val (und, n0) = Iterate.observe(canon, count(lit(1)), 0L)
+      var prevEdges = n0
+      Iterate.until(und, if (n0 == 0L) 0 else rounds, count(lit(1)), 0L,
+          Some(und), identity)(peel) { n =>
+        val same = n == prevEdges
+        prevEdges = n
+        same
+      }
+    } else {
+      val und = canon.localCheckpoint(true)
+      Iterate.chain(und, rounds, checkpointEvery, Some(und), identity)(peel)
+    }
+    (degrees(run.state).select(col("node"), col("dg").as("degree")), run.held)
   }
 
-  /** k-truss peeling (Cohen 2008): iteratively drop every edge whose
-    * SUPPORT (number of triangles it closes) is below k−2, until the
-    * fixpoint where each surviving edge lies in ≥ k−2 triangles — the
-    * edge-level analogue of [[kCore]]'s node peel, and the standard
-    * cohesive-subgraph strengthening of it (every k-truss is inside the
-    * (k−1)-core, but not vice versa). FIXED synchronous rounds for
-    * DuckDB oracle lockstep, exactly the [[kCore]] contract.
-    *
-    * Shape per round: oriented triangle enumeration — wedge equi-join
-    * at each triangle's SMALLEST vertex (every triangle a<b<c found
-    * exactly once from edges (a,b),(a,c)) + one closing-edge equi-join
-    * — then a count per edge and a semi-join filter. All equi-joins, no
-    * per-node neighborhood gathering; the wedge fan-out is the [[q73]]
-    * triangle shape already adjudicated at scale. The round references
-    * its edge frame four times, so every round's survivors materialize
-    * eagerly (the kCore 5×-reference rationale).
-    *
-    * Output: surviving canonical edges with their support ON the
-    * surviving edge set (recomputed once after the loop, so a
-    * non-converged fixed-round run still reports consistent numbers). */
   /** Newman MODULARITY per community (Newman & Girvan 2004): for each
     * community c over an undirected graph with m canonical edges,
     *
@@ -715,7 +612,7 @@ object Graph {
         round(coalesce(col("intra_edges"), lit(0L)).cast("double") / col("m")
           - ratio * ratio, roundTo).as("q_contrib"))
       .localCheckpoint(true)
-    canon.unpersist()
+    Iterate.release(canon)
     out
   }
 
@@ -770,7 +667,7 @@ object Graph {
             coalesce(col("cut_edges"), lit(0L)).cast("double") /
               den.cast("double"), roundTo)).as("conductance"))
       .localCheckpoint(true)
-    canon.unpersist()
+    Iterate.release(canon)
     out
   }
 
@@ -790,6 +687,26 @@ object Graph {
       .groupBy(col("a"), col("b")).agg(count(lit(1)).as("sup"))
   }
 
+  /** k-truss peeling (Cohen 2008): iteratively drop every edge whose
+    * SUPPORT (number of triangles it closes) is below k−2, until the
+    * fixpoint where each surviving edge lies in ≥ k−2 triangles — the
+    * edge-level analogue of [[kCore]]'s node peel, and the standard
+    * cohesive-subgraph strengthening of it (every k-truss is inside the
+    * (k−1)-core, but not vice versa). FIXED synchronous rounds for
+    * DuckDB oracle lockstep, exactly the [[kCore]] contract.
+    *
+    * Shape per round: oriented triangle enumeration — wedge equi-join
+    * at each triangle's SMALLEST vertex (every triangle a<b<c found
+    * exactly once from edges (a,b),(a,c)) + one closing-edge equi-join
+    * — then a count per edge and a semi-join filter. All equi-joins, no
+    * per-node neighborhood gathering; the wedge fan-out is the [[q73]]
+    * triangle shape already adjudicated at scale. The round references
+    * its edge frame four times, so every round's survivors materialize
+    * eagerly (the kCore 5×-reference rationale).
+    *
+    * Output: surviving canonical edges with their support ON the
+    * surviving edge set (recomputed once after the loop, so a
+    * non-converged fixed-round run still reports consistent numbers). */
   def kTruss(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
       rounds: Int = 4): DataFrame = {
     // k = 2 is the identity truss (threshold 0), which the support
@@ -802,29 +719,18 @@ object Graph {
         greatest(col(srcCol), col(dstCol)).as("b"))
       .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
       .distinct()
-    def support(e: DataFrame): DataFrame = trussSupport(e)
-    var und = canon.localCheckpoint(true)
-    var lastCkpt = und
-    var i = 0
-    while (i < rounds) {
-      val keep = support(und).filter(col("sup") >= k - 2)
-        .select(col("a"), col("b"))
-      val next = und.join(keep, Seq("a", "b"), "left_semi")
-        .localCheckpoint(true)
-      lastCkpt.unpersist()
-      lastCkpt = next
-      und = org.apache.spark.sql.graft.PlanBridge.statsFlatLeaf(next)
-      i += 1
+    val und0 = canon.localCheckpoint(true)
+    Iterate.eager(und0, rounds, Some(und0)) { (und, _) =>
+      und.join(trussSupport(und).filter(col("sup") >= k - 2)
+        .select(col("a"), col("b")), Seq("a", "b"), "left_semi")
+    }.finish { und =>
+      // LEFT join: a non-converged fixed-round run can still hold edges
+      // whose support dropped to zero (no support row at all) — they are
+      // part of the round state and must be reported, not silently lost
+      und.join(trussSupport(und), Seq("a", "b"), "left_outer")
+        .select(col("a"), col("b"),
+          coalesce(col("sup"), lit(0L)).as("support"))
     }
-    // LEFT join: a non-converged fixed-round run can still hold edges
-    // whose support dropped to zero (no support row at all) — they are
-    // part of the round state and must be reported, not silently lost
-    val out = und.join(support(und), Seq("a", "b"), "left_outer")
-      .select(col("a"), col("b"),
-        coalesce(col("sup"), lit(0L)).as("support"))
-      .localCheckpoint(true)
-    lastCkpt.unpersist()
-    out
   }
 
   /** HITS hubs-and-authorities (Kleinberg 1999): `iterations` rounds of
@@ -862,48 +768,41 @@ object Graph {
     var hubs = nodes.withColumn("h", lit(1.0))
     var auths: DataFrame = null
     var ckpts = List.empty[DataFrame]
-    def halfRound(sums: DataFrame, valCol: String, tag: String,
-        outCol: String): DataFrame = {
-      val obs = org.apache.spark.sql.Observation()
-      val mat = sums
-        .observe(obs, max(col(valCol).cast("double")).as("mx"))
-        .localCheckpoint(true) // the max rides the materializing job
-      val mx = Option(obs.get("mx")).map(_.asInstanceOf[Double]).getOrElse(1.0)
+    def halfRound(sums: DataFrame, valCol: String, outCol: String): DataFrame = {
+      // the max rides the materializing job
+      val (mat, mx) =
+        Iterate.observe(sums, max(col(valCol).cast("double")), 1.0)
       ckpts ::= mat
       nodes.join(mat, col("node") === col(mat.columns.head), "left_outer")
         .select(col("node"),
           round(coalesce(col(valCol).cast("double"), lit(0.0)) / lit(mx),
             roundTo).as(outCol))
     }
-    var i = 0
-    while (i < iterations) {
+    for (_ <- 1 to iterations) {
       // auth step: inflow of hub mass along edge direction
       auths = halfRound(
         e.join(hubs, col("src") === col("node"))
           .groupBy(col("dst"))
           .agg(sum(col("h").cast(DecimalType(28, 12))).as("asum")),
-        "asum", s"hits-a-$i", "a")
+        "asum", "a")
       // hub step: outflow toward the fresh authority scores
       hubs = halfRound(
         e.join(auths.select(col("node").as("anode"), col("a")),
             col("dst") === col("anode"))
           .groupBy(col("src"))
           .agg(sum(col("a").cast(DecimalType(28, 12))).as("hsum")),
-        "hsum", s"hits-h-$i", "h")
-      i += 1
+        "hsum", "h")
       // the two frames just built are still needed next round; older
       // half-round checkpoints are dead — free them now
       val (live, dead) = ckpts.splitAt(2)
-      dead.foreach(_.unpersist())
+      Iterate.release(dead: _*)
       ckpts = live
     }
     val result = hubs.join(auths.select(col("node").as("n2"), col("a")),
         col("node") === col("n2"))
       .select(col("node"), col("h").as("hub"), col("a").as("auth"))
       .localCheckpoint(true)
-    ckpts.foreach(_.unpersist())
-    e.unpersist()
-    nodes.unpersist()
+    Iterate.release(ckpts :+ e :+ nodes: _*)
     result
   }
 
@@ -933,15 +832,14 @@ object Graph {
       topN: Int = 50, degCap: Int = 256): DataFrame = {
     val (scored, und, adj) = adamicAdarLazy(edges, srcCol, dstCol, topN, degCap)
     val result = scored.localCheckpoint(true)
-    und.unpersist()
-    adj.unpersist()
+    Iterate.release(und, adj)
     result
   }
 
   /** [[adamicAdar]] before its final eager materialization: returns
     * (scored top-N with full lineage, the two checkpointed frames the
-    * caller must unpersist) so plan-quality specs can assert the wedge
-    * join's physical shape. */
+    * caller must [[Iterate.release]]) so plan-quality specs can assert
+    * the wedge join's physical shape. */
   private[graft] def adamicAdarLazy(edges: DataFrame, srcCol: String,
       dstCol: String, topN: Int, degCap: Int): (DataFrame, DataFrame, DataFrame) = {
     require(topN >= 1, "topN must be positive")
@@ -1028,7 +926,7 @@ object Graph {
       .orderBy(col("jac").desc, col("u"), col("v"))
       .limit(topN)
     val result = scored.localCheckpoint(true)
-    und.unpersist(); deg.unpersist(); adj.unpersist()
+    Iterate.release(und, deg, adj)
     result
   }
 
@@ -1099,28 +997,15 @@ object Graph {
         col(timeCol).cast("long").as("et"))
       .filter(col("esrc").isNotNull && col("edst").isNotNull && col("et").isNotNull)
       .localCheckpoint(true)
-    var arr = Seq((source, startTime)).toDF("node", "a")
-    var lastCkpt: Option[DataFrame] = None
-    var i = 0
-    while (i < rounds) {
+    val arr0 = Seq((source, startTime)).toDF("node", "a")
+    val result = Iterate.chain(arr0, rounds, checkpointEvery) { (arr, _) =>
       val relaxed = e.join(arr,
           col("esrc") === col("node") && col("et") >= col("a"))
         .select(col("edst").as("node"), col("et").as("a"))
-      var next = arr.unionAll(relaxed)
+      arr.unionAll(relaxed)
         .groupBy(col("node")).agg(min(col("a")).as("a"))
-      i += 1
-      if (i % checkpointEvery == 0 && i < rounds) {
-        val ck = next.localCheckpoint(true)
-        lastCkpt.foreach(_.unpersist())
-        lastCkpt = Some(ck)
-        next = flat(ck)
-      }
-      arr = next
-    }
-    val result = arr.select(col("node"), col("a").as("arrival"))
-      .localCheckpoint(true)
-    lastCkpt.foreach(_.unpersist())
-    e.unpersist()
+    }.finish(_.select(col("node"), col("a").as("arrival")))
+    Iterate.release(e)
     result
   }
 
@@ -1150,60 +1035,19 @@ object Graph {
     require(pre.filter(col("w") < 0).isEmpty,
       "multi-source SSSP requires non-negative weights")
     val e = pre.localCheckpoint(true)
-    var dist = sources.select(col(sources.columns.head).cast("long").as("source"))
+    val dist0 = sources.select(col(sources.columns.head).cast("long").as("source"))
       .filter(col("source").isNotNull).distinct()
       .select(col("source"), col("source").as("node"), lit(0L).as("d"))
-    var lastCkpt: Option[DataFrame] = None
-    var i = 0
-    while (i < rounds) {
+    val result = Iterate.chain(dist0, rounds, checkpointEvery) { (dist, _) =>
       val relaxed = e.join(dist, col("esrc") === col("node"))
         .select(col("source"), col("edst").as("node"), (col("d") + col("w")).as("d"))
-      var next = dist.unionAll(relaxed)
+      dist.unionAll(relaxed)
         .groupBy(col("source"), col("node")).agg(min(col("d")).as("d"))
-      i += 1
-      if (i % checkpointEvery == 0 && i < rounds) {
-        val ck = next.localCheckpoint(true)
-        lastCkpt.foreach(_.unpersist())
-        lastCkpt = Some(ck)
-        next = flat(ck)
-      }
-      dist = next
-    }
-    val result = dist.select(col("source"), col("node"), col("d").as("dist"))
-      .localCheckpoint(true)
-    lastCkpt.foreach(_.unpersist())
-    e.unpersist()
+    }.finish(_.select(col("source"), col("node"), col("d").as("dist")))
+    Iterate.release(e)
     result
   }
 
-  /** Louvain-style local-move community detection (Blondel et al. 2008,
-    * phase 1) over an UNDIRECTED unit-weight edge list: `rounds`
-    * SYNCHRONOUS rounds in which each active node adopts the neighbor
-    * community maximizing the modularity gain, or stays put.
-    *
-    * Determinism contract (the [[labelPropagation]] fixed-round
-    * pattern): all modularity-gain comparisons are EXACT — the gain of
-    * moving u into community c (vs. u isolated) is
-    * `k_{u,c}/m − deg(u)·tot_c/(2m²)`, and multiplying through by the
-    * positive constant 2m² gives the integer score
-    * `2m·k_{u,c} − deg(u)·tot'_c` (tot' excludes u itself when c is
-    * u's current community), computed in DECIMAL so a trillion-edge
-    * graph cannot wrap — ties break toward the smaller community id
-    * via the same `min(struct(-score, comm))` shape as LPA's argmax.
-    * Synchronous simultaneous moves can oscillate (two connected nodes
-    * swapping communities forever), so each round only nodes of one id
-    * parity (`node % 2 == round % 2`) move — a deterministic
-    * half-schedule that a DuckDB oracle replays in exact lockstep,
-    * unlike the randomized sequential sweep of the original algorithm.
-    *
-    * Shape per round: one neighbor-label equi-join + a (node, comm)
-    * partial-counting aggregation (k_{u,c}), one per-community degree
-    * sum (tot), and one per-node argmax — never a window over a
-    * neighborhood, so hubs cost their edge count spread across tasks.
-    * The labels frame feeds four consumers per round, so each round
-    * materializes eagerly with flattened stats (the [[kCore]]
-    * discipline). Output: `(node, label)` for every node with an edge.
-    */
   /** One [[louvainMove]] round's per-node argmax on a directed-both-ways
     * edge frame `und (a, b)`, a degree frame `deg (node, dg)`, a label
     * frame `lab (node, lbl)` and the undirected edge total `m`: returns
@@ -1256,11 +1100,39 @@ object Graph {
       .select(col("node"), col("b.cm").as("newlbl"))
   }
 
+  /** Louvain-style local-move community detection (Blondel et al. 2008,
+    * phase 1) over an UNDIRECTED unit-weight edge list: `rounds`
+    * SYNCHRONOUS rounds in which each active node adopts the neighbor
+    * community maximizing the modularity gain, or stays put.
+    *
+    * Determinism contract (the [[labelPropagation]] fixed-round
+    * pattern): all modularity-gain comparisons are EXACT — the gain of
+    * moving u into community c (vs. u isolated) is
+    * `k_{u,c}/m − deg(u)·tot_c/(2m²)`, and multiplying through by the
+    * positive constant 2m² gives the integer score
+    * `2m·k_{u,c} − deg(u)·tot'_c` (tot' excludes u itself when c is
+    * u's current community), computed in DECIMAL so a trillion-edge
+    * graph cannot wrap — ties break toward the smaller community id
+    * via the same `min(struct(-score, comm))` shape as LPA's argmax.
+    * Synchronous simultaneous moves can oscillate (two connected nodes
+    * swapping communities forever), so each round only nodes of one id
+    * parity (`node % 2 == round % 2`) move — a deterministic
+    * half-schedule that a DuckDB oracle replays in exact lockstep,
+    * unlike the randomized sequential sweep of the original algorithm.
+    *
+    * Shape per round: one neighbor-label equi-join + a (node, comm)
+    * partial-counting aggregation (k_{u,c}), one per-community degree
+    * sum (tot), and one per-node argmax — never a window over a
+    * neighborhood, so hubs cost their edge count spread across tasks.
+    * The labels frame feeds four consumers per round, so each round
+    * materializes eagerly with flattened stats (the [[kCore]]
+    * discipline). Output: `(node, label)` for every node with an edge.
+    */
   def louvainMove(edges: DataFrame, srcCol: String, dstCol: String,
       rounds: Int = 4): DataFrame = {
     val canon = louvainCanon(edges, srcCol, dstCol)
     val res = louvainMoveOnCanon(canon, rounds)
-    canon.unpersist()
+    Iterate.release(canon)
     res
   }
 
@@ -1269,7 +1141,7 @@ object Graph {
     * eagerly checkpointed. Shared by [[louvainMove]] and
     * [[louvainTwoPass]] so the two-pass path pays the corpus-wide
     * distinct ONCE (it used to run it twice — once inside the phase-1
-    * call and once for coarsening). Caller unpersists. */
+    * call and once for coarsening). Caller releases it. */
   private[graft] def louvainCanon(edges: DataFrame, srcCol: String,
       dstCol: String): DataFrame = edges
     .select(least(col(srcCol), col(dstCol)).cast("long").as("a"),
@@ -1290,27 +1162,25 @@ object Graph {
       .localCheckpoint(true) // canon stays persisted — the CALLER owns it
     val deg = und.groupBy(col("a").as("node")).agg(count(lit(1)).as("dg"))
       .localCheckpoint(true)
-    var labels = deg.select(col("node"), col("node").as("lbl"))
-    var lastCkpt: Option[DataFrame] = None
-    for (i <- 1 to rounds) {
-      val lab = labels
-      val best = louvainBest(und, deg, lab, m)
-      val next = lab.join(best, Seq("node"))
-        .select(col("node"),
-          when(pmod(col("node"), lit(2)) === lit(i % 2), col("newlbl"))
-            .otherwise(col("lbl")).as("lbl"))
-        .localCheckpoint(true)
-      lastCkpt.foreach(_.unpersist())
-      lastCkpt = Some(next)
-      labels = flat(next)
-    }
-    val result = labels.select(col("node"), col("lbl").as("label"))
-      .localCheckpoint(true)
-    lastCkpt.foreach(_.unpersist())
-    und.unpersist()
-    deg.unpersist()
+    val result = parityMoves(deg, rounds)(louvainBest(und, deg, _, m))
+      .finish(_.select(col("node"), col("lbl").as("label")))
+    Iterate.release(und, deg)
     result
   }
+
+  /** The Louvain local-move rounds over a degree frame `deg (node, dg)`:
+    * every node starts in its own community, and round i moves only the
+    * nodes with `node % 2 == i % 2` to their `best` label
+    * (`(node, newlbl)` from the current `(node, lbl)` frame). */
+  private def parityMoves(deg: DataFrame, rounds: Int)(
+      best: DataFrame => DataFrame): Iterate.Run =
+    Iterate.eager(deg.select(col("node"), col("node").as("lbl")), rounds) {
+      (lab, i) =>
+        lab.join(best(lab), Seq("node"))
+          .select(col("node"),
+            when(pmod(col("node"), lit(2)) === lit(i % 2), col("newlbl"))
+              .otherwise(col("lbl")).as("lbl"))
+    }
 
   /** Full two-pass Louvain (Blondel et al. 2008 phases 1+2):
     * [[louvainMove]] local moves on the unit graph, then COARSEN — each
@@ -1347,7 +1217,7 @@ object Graph {
       .localCheckpoint(true)
     val mRow = ce.agg(sum(col("w"))).head()
     if (mRow.isNullAt(0)) { // no edges at all
-      ce.unpersist(); canon.unpersist(); return l1
+      Iterate.release(ce, canon); return l1
     }
     val m = mRow.getLong(0)
     val inter = ce.filter(col("a") =!= col("b"))
@@ -1366,27 +1236,12 @@ object Graph {
         (coalesce(col("idg"), lit(0L)) +
           lit(2L) * coalesce(col("sw"), lit(0L))).as("dg"))
       .localCheckpoint(true)
-    var labels = deg2.select(col("node"), col("node").as("lbl"))
-    var lastCkpt: Option[DataFrame] = None
-    for (i <- 1 to rounds2) {
-      val lab = labels
-      val best = louvainBestW(und2, deg2, lab, m)
-      val next = lab.join(best, Seq("node"))
-        .select(col("node"),
-          when(pmod(col("node"), lit(2)) === lit(i % 2), col("newlbl"))
-            .otherwise(col("lbl")).as("lbl"))
-        .localCheckpoint(true)
-      lastCkpt.foreach(_.unpersist())
-      lastCkpt = Some(next)
-      labels = flat(next)
-    }
-    val result = l1
-      .join(labels.select(col("node").as("label"), col("lbl")), Seq("label"))
-      .select(col("node"), col("lbl").as("label"))
-      .localCheckpoint(true)
-    lastCkpt.foreach(_.unpersist())
-    und2.unpersist(); deg2.unpersist(); ce.unpersist(); canon.unpersist()
-    if (phase1.isEmpty) l1.unpersist() // a supplied phase-1 is the caller's
+    val result = parityMoves(deg2, rounds2)(louvainBestW(und2, deg2, _, m))
+      .finish(labels => l1
+        .join(labels.select(col("node").as("label"), col("lbl")), Seq("label"))
+        .select(col("node"), col("lbl").as("label")))
+    Iterate.release(und2, deg2, ce, canon)
+    if (phase1.isEmpty) Iterate.release(l1) // a supplied phase-1 is the caller's
     result
   }
 
@@ -1459,8 +1314,7 @@ object Graph {
       state = next
     }
     val out = slices.reduce(_ unionAll _).localCheckpoint(true)
-    ckpts.foreach(_.unpersist())
-    adj.unpersist()
+    Iterate.release((ckpts :+ adj).toSeq: _*)
     out
   }
 
@@ -1523,9 +1377,7 @@ object Graph {
       state = next
     }
     val out = slices.reduce(_ unionAll _).localCheckpoint(true)
-    ckpts.foreach(_.unpersist())
-    adj.unpersist()
-    dir.unpersist()
+    Iterate.release((ckpts ++ Seq(adj, dir)).toSeq: _*)
     out
   }
 
@@ -1630,7 +1482,7 @@ object Graph {
       .reduce(_ unionAll _)
     for (d <- rounds to 1 by -1) {
       val next = brandesDependencyStep(delta, e, d).localCheckpoint(true)
-      levels += next // unpersisted with the rest after the final checkpoint
+      levels += next // released with the rest after the final checkpoint
       delta = flat(next)
     }
     val res = delta.filter(col("node") =!= col("source"))
@@ -1638,7 +1490,7 @@ object Graph {
       .agg(sum(col("delta")).as("dsum"))
       .select(col("node"), round(col("dsum").cast("double"), 6).as("btw"))
       .localCheckpoint(true)
-    (levels += e).foreach(_.unpersist())
+    Iterate.release((levels :+ e).toSeq: _*)
     res
   }
 
@@ -1686,25 +1538,11 @@ object Graph {
     require(rounds >= 1, "need at least one merge round")
     require(checkpointEvery >= 1, "checkpointEvery must be positive")
     val e = hllEdges(edges, srcCol, dstCol)
-    var sketch = hllInitSketch(e)
-    var lastCkpt: Option[DataFrame] = Some(sketch)
-    var i = 0
-    while (i < rounds) {
-      var next = hyperBallMergeStep(sketch, e)
-      i += 1
-      if (i % checkpointEvery == 0 && i < rounds) {
-        val ck = next.localCheckpoint(true)
-        lastCkpt.foreach(_.unpersist())
-        lastCkpt = Some(ck)
-        next = flat(ck)
-      }
-      sketch = next
-    }
-    val res = hllEstimate(sketch)
-      .select(col("node"), col("est").as("reach_est"))
-      .localCheckpoint(true)
-    lastCkpt.foreach(_.unpersist())
-    e.unpersist()
+    val sketch0 = hllInitSketch(e)
+    val res = Iterate.chain(sketch0, rounds, checkpointEvery, Some(sketch0))(
+        (sketch, _) => hyperBallMergeStep(sketch, e))
+      .finish(hllEstimate(_).select(col("node"), col("est").as("reach_est")))
+    Iterate.release(e)
     res
   }
 
@@ -1734,7 +1572,7 @@ object Graph {
       .agg(sum(col("est").cast(DecimalType(28, 6))).as("nf"))
       .select(col("r"), col("nf").cast("double").as("nf_est"))
       .localCheckpoint(true)
-    (perRound += e).foreach(_.unpersist())
+    Iterate.release((perRound :+ e).toSeq: _*)
     res
   }
 
@@ -1789,16 +1627,11 @@ object Graph {
     // to running the full budget — it only skips rounds that would
     // union nothing. q141 drives 6 colors × this loop; the later,
     // smaller subgraphs drain in 1-2 rounds.
-    val undecObs0 = org.apache.spark.sql.Observation()
-    var undec = adj.select(col("node")).distinct()
-      .withColumn("prio", md5(col("node").cast("string")))
-      .observe(undecObs0, count(lit(1)).as("n"))
-      .localCheckpoint(true)
-    var undecCount = undecObs0.get("n").asInstanceOf[Long]
-    val ckpts = scala.collection.mutable.ArrayBuffer(adj, undec)
+    val (undec0, n0) = Iterate.observe(adj.select(col("node")).distinct()
+      .withColumn("prio", md5(col("node").cast("string"))), count(lit(1)), 0L)
     val misParts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var rnd = 0
-    while (rnd < rounds && undecCount > 0L) {
+    val run = Iterate.until(undec0, if (n0 == 0L) 0 else rounds,
+        count(lit(1)), 0L, Some(undec0), identity) { (undec, _) =>
       val nbrBest = adj
         .join(undec.select(col("node").as("nbr"), col("prio").as("nprio")),
           Seq("nbr"))
@@ -1807,6 +1640,7 @@ object Graph {
         .filter(col("best").isNull || col("prio") > col("best"))
         .select(col("node"))
         .localCheckpoint(true)
+      misParts += winners
       // Round-16 (guide §2.4): the undecided update was two sequential
       // anti-joins with a distinct on the knockout set — the distinct
       // exchange and the second anti-join probe are both unnecessary:
@@ -1817,23 +1651,13 @@ object Graph {
       val knockedOrWon = winners.select(col("node"))
         .unionAll(adj.join(winners.select(col("node")), Seq("node"))
           .select(col("nbr").as("node")))
-      val undecObs = org.apache.spark.sql.Observation()
-      undec = undec
-        .join(knockedOrWon, Seq("node"), "left_anti")
-        .observe(undecObs, count(lit(1)).as("n"))
-        .localCheckpoint(true)
-      undecCount = undecObs.get("n").asInstanceOf[Long]
-      ckpts += winners
-      ckpts += undec
-      misParts += winners
-      rnd += 1
-    }
+      undec.join(knockedOrWon, Seq("node"), "left_anti")
+    }(_ == 0L)
     // an empty graph never enters the loop: emit the schema-correct
     // empty frame (the old fixed-round form unioned empty winners)
-    val res = misParts.reduceOption(_ unionAll _)
-      .getOrElse(undec.select(col("node")).filter(lit(false)))
-      .localCheckpoint(true)
-    ckpts.foreach(_.unpersist())
+    val res = run.finish(undec => misParts.reduceOption(_ unionAll _)
+      .getOrElse(undec.select(col("node")).filter(lit(false))))
+    Iterate.release((misParts :+ adj).toSeq: _*)
     res
   }
 
@@ -1971,7 +1795,7 @@ object Graph {
           round(col("lsum").cast("double") / col("n2").cast("double"), 6))
           .as("avg_local_cc"))
       .localCheckpoint(true)
-    und.unpersist()
+    Iterate.release(und, tri)
     res
   }
 
@@ -2133,30 +1957,18 @@ object Graph {
     val nodes = e.select(col("src").as("node"))
       .unionAll(e.select(col("dst").as("node")))
       .distinct().localCheckpoint(true)
-    var scores = nodes.withColumn("x", lit(beta))
-    var lastCkpt: Option[DataFrame] = None
-    var i = 0
-    while (i < iterations) {
-      val inflow = e.join(scores, col("src") === col("node"))
-        .groupBy(col("dst"))
-        .agg(sum(col("x").cast(DecimalType(28, 12))).as("xsum"))
-      var next = nodes.join(inflow, col("node") === col("dst"), "left_outer")
-        .select(col("node"),
-          round(lit(beta) + lit(alpha) *
-            coalesce(col("xsum").cast("double"), lit(0.0)), roundTo).as("x"))
-      i += 1
-      if (i % checkpointEvery == 0 && i < iterations) {
-        val ck = next.localCheckpoint(true)
-        lastCkpt.foreach(_.unpersist())
-        lastCkpt = Some(ck)
-        next = flat(ck)
-      }
-      scores = next
-    }
-    val result = scores.localCheckpoint(true)
-    lastCkpt.foreach(_.unpersist())
-    e.unpersist()
-    nodes.unpersist()
+    val scores0 = nodes.withColumn("x", lit(beta))
+    val result = Iterate.chain(scores0, iterations, checkpointEvery) {
+      (scores, _) =>
+        val inflow = e.join(scores, col("src") === col("node"))
+          .groupBy(col("dst"))
+          .agg(sum(col("x").cast(DecimalType(28, 12))).as("xsum"))
+        nodes.join(inflow, col("node") === col("dst"), "left_outer")
+          .select(col("node"),
+            round(lit(beta) + lit(alpha) *
+              coalesce(col("xsum").cast("double"), lit(0.0)), roundTo).as("x"))
+    }.finish()
+    Iterate.release(e, nodes)
     result.select(col("node"), col("x").as("katz"))
   }
 
@@ -2221,7 +2033,7 @@ object Graph {
           round(col("mutual_edges").cast("double") /
             col("m_edges").cast("double"), 6)).as("reciprocity"))
       .localCheckpoint(true) // materialize before releasing the edge frame
-    e.unpersist()
+    Iterate.release(e)
     res
   }
 
@@ -2292,13 +2104,10 @@ object Graph {
     // stay LAZY — anti-joins of two checkpointed leaves, materialized
     // inside the final union. Identical output multiset: trim rule,
     // propagation rounds, pivot flags and budgets are untouched.
-    val nodesObs = org.apache.spark.sql.Observation()
-    val nodes0 = e0.select(col("esrc").as("node"))
+    val (nodes0, nodesCount) = Iterate.observe(e0.select(col("esrc").as("node"))
       .unionAll(e0.select(col("edst").as("node")))
-      .distinct()
-      .observe(nodesObs, count(lit(1)).as("n"))
-      .localCheckpoint(true)
-    var remainingCount = nodesObs.get("n").asInstanceOf[Long]
+      .distinct(), count(lit(1)), 0L)
+    var remainingCount = nodesCount
     var remaining = nodes0
     var ea = e0
     val assigneds = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
@@ -2314,15 +2123,11 @@ object Graph {
       var trimFixpoint = false
       while (t < trimRounds && !trimFixpoint) {
         val nonself = ea.filter(col("esrc") =!= col("edst"))
-        val aliveObs = org.apache.spark.sql.Observation()
-        val alive = remaining
+        val (alive, aliveCount) = Iterate.observe(remaining
           .join(nonself.select(col("esrc").as("node")), Seq("node"),
             "left_semi")
           .join(nonself.select(col("edst").as("node")), Seq("node"),
-            "left_semi")
-          .observe(aliveObs, count(lit(1)).as("n"))
-          .localCheckpoint(true)
-        val aliveCount = aliveObs.get("n").asInstanceOf[Long]
+            "left_semi"), count(lit(1)), 0L)
         if (aliveCount == remainingCount) {
           retired += alive
           trimFixpoint = true
@@ -2350,25 +2155,13 @@ object Graph {
       } else {
       // 1. forward min-label propagation — lazy chained rounds with the
       //    temporalEarliestArrival lineage-truncation cadence
-      var colors = remaining.withColumn("color", col("node"))
-      var lastCk: Option[DataFrame] = None
-      var p = 0
-      while (p < propRounds) {
+      val colors = Iterate.chain(remaining.withColumn("color", col("node")),
+          propRounds, 4) { (colors, _) =>
         val relaxed = ea.join(colors, col("esrc") === col("node"))
           .select(col("edst").as("node"), col("color"))
-        var next = colors.unionAll(relaxed)
+        colors.unionAll(relaxed)
           .groupBy(col("node")).agg(min(col("color")).as("color"))
-        p += 1
-        if (p % 4 == 0 && p < propRounds) {
-          val ck = next.localCheckpoint(true)
-          lastCk.foreach(_.unpersist())
-          lastCk = Some(ck)
-          next = flat(ck)
-        }
-        colors = next
-      }
-      colors = colors.localCheckpoint(true)
-      lastCk.foreach(_.unpersist()); lastCk = None
+      }.finish()
       // 2. backward flag propagation over intra-color edges only
       val intra = ea
         .join(colors.select(col("node").as("esrc"), col("color").as("csrc")),
@@ -2378,24 +2171,12 @@ object Graph {
         .filter(col("csrc") === col("cdst"))
         .select(col("esrc"), col("edst"))
         .localCheckpoint(true)
-      var flags: DataFrame = colors.filter(col("color") === col("node"))
-        .select(col("node"))
-      p = 0
-      while (p < propRounds) {
+      val flags = Iterate.chain(colors.filter(col("color") === col("node"))
+          .select(col("node")), propRounds, 4) { (flags, _) =>
         val reached = intra.join(flags, col("edst") === col("node"))
           .select(col("esrc").as("node"))
-        var next = flags.unionAll(reached).distinct()
-        p += 1
-        if (p % 4 == 0 && p < propRounds) {
-          val ck = next.localCheckpoint(true)
-          lastCk.foreach(_.unpersist())
-          lastCk = Some(ck)
-          next = flat(ck)
-        }
-        flags = next
-      }
-      flags = flags.localCheckpoint(true)
-      lastCk.foreach(_.unpersist())
+        flags.unionAll(reached).distinct()
+      }.finish()
       retired += colors; retired += flags
       // 3. assign the flagged SCCs, peel the subgraph
       val newly = colors.join(flags, Seq("node"))
@@ -2403,12 +2184,10 @@ object Graph {
         .localCheckpoint(true)
       assigneds += newly
       val (prevRemaining, prevEa) = (remaining, ea)
-      val remObs = org.apache.spark.sql.Observation()
-      remaining = remaining.join(newly.select(col("node")), Seq("node"),
-          "left_anti")
-        .observe(remObs, count(lit(1)).as("n"))
-        .localCheckpoint(true)
-      remainingCount = remObs.get("n").asInstanceOf[Long]
+      val (rem, remCount) = Iterate.observe(remaining.join(
+        newly.select(col("node")), Seq("node"), "left_anti"), count(lit(1)), 0L)
+      remaining = rem
+      remainingCount = remCount
       ea = ea.join(remaining.select(col("node").as("esrc")), Seq("esrc"),
           "left_semi")
         .join(remaining.select(col("node").as("edst")), Seq("edst"),
@@ -2430,8 +2209,7 @@ object Graph {
     retired ++= assigneds
     if (remaining ne nodes0) retired += remaining
     if (ea ne e0) retired += ea
-    retired.foreach(_.unpersist())
-    e0.unpersist(); nodes0.unpersist()
+    Iterate.release((retired ++ Seq(e0, nodes0)).toSeq: _*)
     out
   }
 
@@ -2469,7 +2247,7 @@ object Graph {
       .groupBy(col("src_comp"), col("dst_comp"))
       .agg(count(lit(1)).as("n_edges"))
       .localCheckpoint(true)
-    labels.unpersist()
+    Iterate.release(labels)
     out
   }
 
@@ -2514,7 +2292,6 @@ object Graph {
     val nodes0 = und.select(col("a").as("node"))
       .unionAll(und.select(col("b").as("node")))
       .distinct().localCheckpoint(true)
-    var remaining = nodes0
     // Round-15 job-count reduction (the minimumSpanningForest treatment;
     // per-color driver materializations dominate at bench scale —
     // profiled 311 single-stage jobs for 4.2 s of task time): (a) the
@@ -2528,8 +2305,8 @@ object Graph {
     // tournament, peel order and color tags are untouched.
     val coloreds = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val retired = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var c = 0
-    while (c < colors) {
+    val run = Iterate.until(nodes0, colors, count(lit(1)), 0L,
+        leaf = identity) { (remaining, c) =>
       val subE = und
         .join(remaining.select(col("node").as("a")), Seq("a"), "left_semi")
         .join(remaining.select(col("node").as("b")), Seq("b"), "left_semi")
@@ -2541,34 +2318,21 @@ object Graph {
       val isolated = remaining.join(graphNodes, Seq("node"), "left_anti")
       val mis = lubyMis(subE, "a", "b", misRounds)
       val colored = mis.select(col("node")).unionAll(isolated)
-        .withColumn("color", lit(c.toLong))
+        .withColumn("color", lit(c - 1L))
         .localCheckpoint(true)
       coloreds += colored
-      val prevRemaining = remaining
-      val obs = org.apache.spark.sql.Observation()
-      remaining = remaining
-        .join(colored.select(col("node")), Seq("node"), "left_anti")
-        .observe(obs, count(lit(1)).as("n"))
-        .localCheckpoint(true)
-      val nRemaining = obs.get("n").asInstanceOf[Long]
-      if (prevRemaining ne nodes0) retired += prevRemaining
       retired += subE; retired += mis
-      c += 1
-      if (nRemaining == 0L) c = colors
-    }
+      remaining.join(colored.select(col("node")), Seq("node"), "left_anti")
+    }(_ == 0L)
     // self-loop-only nodes: in the edge list but not in the self-loop-
     // free undirected graph — inherently uncolorable, emitted NULL
     val selfLoopOnly = rawNodes.join(nodes0, Seq("node"), "left_anti")
-    val out = coloreds.reduceOption(_ unionAll _)
+    val out = run.finish(remaining => coloreds.reduceOption(_ unionAll _)
       .getOrElse(nodes0.select(col("node"),
         lit(null).cast("long").as("color")).filter(lit(false)))
       .unionAll(remaining.withColumn("color", lit(null).cast("long")))
-      .unionAll(selfLoopOnly.withColumn("color", lit(null).cast("long")))
-      .localCheckpoint(true)
-    retired ++= coloreds
-    if (remaining ne nodes0) retired += remaining
-    retired.foreach(_.unpersist())
-    und.unpersist(); nodes0.unpersist(); rawNodes.unpersist()
+      .unionAll(selfLoopOnly.withColumn("color", lit(null).cast("long"))))
+    Iterate.release((retired ++ coloreds ++ Seq(und, nodes0, rawNodes)).toSeq: _*)
     out
   }
 
@@ -2595,29 +2359,17 @@ object Graph {
       .filter(col("esrc").isNotNull && col("edst").isNotNull)
       .distinct()
       .localCheckpoint(true)
-    var levels = e.select(col("esrc").as("node"))
+    val levels0 = e.select(col("esrc").as("node"))
       .unionAll(e.select(col("edst").as("node")))
       .distinct()
       .withColumn("level", lit(0L))
-    var lastCkpt: Option[DataFrame] = None
-    var i = 0
-    while (i < rounds) {
+    val out = Iterate.chain(levels0, rounds, checkpointEvery) { (levels, _) =>
       val relaxed = e.join(levels, col("esrc") === col("node"))
         .select(col("edst").as("node"), (col("level") + 1L).as("level"))
-      var next = levels.unionAll(relaxed)
+      levels.unionAll(relaxed)
         .groupBy(col("node")).agg(max(col("level")).as("level"))
-      i += 1
-      if (i % checkpointEvery == 0 && i < rounds) {
-        val ck = next.localCheckpoint(true)
-        lastCkpt.foreach(_.unpersist())
-        lastCkpt = Some(ck)
-        next = flat(ck)
-      }
-      levels = next
-    }
-    val out = levels.localCheckpoint(true)
-    lastCkpt.foreach(_.unpersist())
-    e.unpersist()
+    }.finish()
+    Iterate.release(e)
     out
   }
 
@@ -2705,16 +2457,12 @@ object Graph {
         .filter(col("ca") =!= col("cb"))
         .select(explode(array(col("ca"), col("cb"))).as("c"),
           col("w"), col("a"), col("b"))
-      val obs = org.apache.spark.sql.Observation()
-      val sel = bids.groupBy(col("c"))
+      val (sel, nSel) = Iterate.observe(bids.groupBy(col("c"))
         .agg(min(struct(col("w"), col("a"), col("b"))).as("m"))
         .select(col("m.a").as("a"), col("m.b").as("b"),
           col("m.w").as("w"))
         .distinct()
-        .withColumn("added_round", lit(r.toLong))
-        .observe(obs, count(lit(1)).as("n"))
-        .localCheckpoint(true)
-      val nSel = obs.get("n").asInstanceOf[Long]
+        .withColumn("added_round", lit(r.toLong)), count(lit(1)), 0L)
       if (nSel == 0L) { done = true; retired += sel }
       else {
         sels += sel
@@ -2747,8 +2495,7 @@ object Graph {
         col("w").as("weight"), col("added_round"))
       .localCheckpoint(true)
     retired ++= sels
-    retired.foreach(_.unpersist())
-    comp.unpersist(); e.unpersist()
+    Iterate.release((retired ++ Seq(comp, e)).toSeq: _*)
     out
   }
 }

@@ -16,7 +16,8 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * nested schema (as computed by [[SchemaOnRead]]) — the auto-apply the
   * reference left to the user ("re-create the read with the generated
   * schema", reference README.md:20-28). Fail-open: any error or any change
-  * to the query's result schema abandons the rewrite.
+  * to the query's result schema abandons the rewrite, logged once as a
+  * warning with its reason.
   *
   * The mechanical core is attribute/ordinal resynchronization: narrowing a
   * relation's `dataSchema` changes struct field ordinals and attribute
@@ -25,7 +26,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * propagated bottom-up (the part the reference sidesteps by making the
   * caller rebuild the query).
   */
-object PlanRewriter {
+object PlanRewriter extends org.apache.spark.internal.Logging {
 
   /** Marks plans this rule has already processed — the rule sits in a
     * fix-point optimizer batch and re-analysis is pure overhead. */
@@ -46,23 +47,17 @@ object PlanRewriter {
       out.setTagValue(processedTag, true)
       // The rewrite must stay resolved and the query's visible result
       // schema unchanged — otherwise abandon it (fail-open).
-      if (!out.resolved) {
-        if (sys.env.contains("GRAFT_DEBUG")) {
-          println("=== unresolved rewrite ===")
-          println("BEFORE:\n" + plan.treeString)
-          println("AFTER:\n" + out.treeString)
-        }
-        plan
-      } else if (sameSchema(out.schema, plan.schema)) out
-      else plan
+      if (!out.resolved) abandon(plan, "unresolved")
+      else if (sameSchema(out.schema, plan.schema)) out
+      else abandon(plan, "result schema changed")
     } catch {
-      case NonFatal(e) =>
-        if (sys.env.contains("GRAFT_DEBUG")) {
-          println("=== rewrite abandoned by exception ===")
-          e.printStackTrace()
-        }
-        plan
+      case NonFatal(e) => abandon(plan, s"exception ($e)")
     }
+  }
+
+  private def abandon(plan: LogicalPlan, reason: String): LogicalPlan = {
+    logWarning(s"schema-on-read rewrite abandoned ($reason); plan left unchanged")
+    plan
   }
 
   private def sameSchema(a: StructType, b: StructType): Boolean =

@@ -1230,4 +1230,85 @@ class GraphSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(shallow === Map(1L -> 0L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L))
   }
+
+  /** Persisted RDD ids the frame's plan reads (its checkpoint leaves). */
+  private def heldBy(df: org.apache.spark.sql.DataFrame): Set[Int] =
+    df.queryExecution.analyzed.collectLeaves().collect {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+    }.toSet
+
+  test("iterative operators release every block except the ones their result holds") {
+    val sp = spark; import sp.implicits._
+    // cycles (1-2-3, 4-5), a dangling sink (6), a clique (7..10) hanging
+    // off node 1, and a chain long enough that every loop below runs
+    // past its checkpoint cadence
+    val raw = Seq((1L, 2L, 3L, 1L), (2L, 3L, 1L, 2L), (3L, 1L, 2L, 3L),
+      (3L, 4L, 4L, 4L), (4L, 5L, 1L, 5L), (5L, 4L, 2L, 6L), (5L, 6L, 5L, 7L),
+      (2L, 5L, 2L, 3L), (7L, 1L, 1L, 1L)) ++
+      (for (a <- 7L to 10L; b <- 7L to 10L if a != b) yield (a, b, a + b, a))
+    val g = raw.toDF("src", "dst", "w", "tm")
+    val dag = Seq((1L, 2L), (2L, 3L), (3L, 5L), (1L, 4L), (4L, 5L), (5L, 6L))
+      .toDF("src", "dst")
+    val sources = Seq(1L, 7L).toDF("s")
+    val sc = spark.sparkContext
+    def check(name: String)(call: => org.apache.spark.sql.DataFrame): Unit = {
+      val before = sc.getPersistentRDDs.keySet
+      val out = call
+      val grown = sc.getPersistentRDDs.keySet -- before
+      val held = heldBy(out)
+      assert(grown.subsetOf(held),
+        s"$name left ${(grown -- held).size} checkpoint(s) persisted")
+      Iterate.release(out)
+    }
+    for (tol <- Seq(None, Some(0.0))) {
+      check(s"pageRank $tol")(Graph.pageRank(g, "src", "dst", iterations = 6,
+        checkpointEvery = 2, convergeTol = tol))
+      check(s"personalizedPageRank $tol")(Graph.personalizedPageRank(g,
+        "src", "dst", Seq(1L), iterations = 6, checkpointEvery = 2,
+        convergeTol = tol))
+    }
+    for (stop <- Seq(false, true))
+      check(s"kCore stopEarly=$stop")(Graph.kCore(g, "src", "dst", k = 2,
+        rounds = 5, checkpointEvery = 2, stopEarly = stop))
+    check("weightedPageRank")(Graph.weightedPageRank(g, "src", "dst", "w",
+      iterations = 5, checkpointEvery = 2))
+    check("labelPropagation")(Graph.labelPropagation(g, "src", "dst",
+      rounds = 5, checkpointEvery = 2))
+    check("kTruss")(Graph.kTruss(g, "src", "dst", k = 3, rounds = 3))
+    check("hits")(Graph.hits(g, "src", "dst", iterations = 4))
+    check("ssspBellmanFord")(Graph.ssspBellmanFord(g, "src", "dst", "w",
+      source = 1L, rounds = 5, checkpointEvery = 2))
+    check("multiSourceSssp")(Graph.multiSourceSssp(g, "src", "dst", "w",
+      sources, rounds = 5, checkpointEvery = 2))
+    check("temporalEarliestArrival")(Graph.temporalEarliestArrival(g, "src",
+      "dst", "tm", source = 1L, startTime = 0L, rounds = 5,
+      checkpointEvery = 2))
+    check("harmonicCentrality")(Graph.harmonicCentrality(g, "src", "dst",
+      sources, rounds = 4))
+    check("katzCentrality")(Graph.katzCentrality(g, "src", "dst",
+      iterations = 5, checkpointEvery = 2))
+    check("louvainMove")(Graph.louvainMove(g, "src", "dst", rounds = 3))
+    check("louvainTwoPass")(Graph.louvainTwoPass(g, "src", "dst", 3, 3))
+    check("randomWalks")(Graph.randomWalks(g, "src", "dst", length = 3))
+    check("node2vecWalks")(Graph.node2vecWalks(g, "src", "dst", length = 3))
+    check("betweenness")(Graph.betweenness(g, "src", "dst", sources, rounds = 3))
+    check("hyperBallReach")(Graph.hyperBallReach(g, "src", "dst", rounds = 5,
+      checkpointEvery = 2))
+    check("neighborhoodFunction")(Graph.neighborhoodFunction(g, "src", "dst",
+      rounds = 3))
+    check("effectiveDiameter")(Graph.effectiveDiameter(g, "src", "dst",
+      rounds = 3))
+    check("lubyMis")(Graph.lubyMis(g, "src", "dst", rounds = 4))
+    check("jpColoring")(Graph.jpColoring(g, "src", "dst", colors = 4,
+      misRounds = 3))
+    check("stronglyConnectedComponents")(Graph.stronglyConnectedComponents(g,
+      "src", "dst", outerRounds = 2, propRounds = 9, trimRounds = 2))
+    check("sccCondensation")(Graph.sccCondensation(g, "src", "dst",
+      propRounds = 9))
+    check("dagLevels")(Graph.dagLevels(dag, "src", "dst", rounds = 5,
+      checkpointEvery = 2))
+    // connectedComponents and minimumSpanningForest are left out: their
+    // rounds run in Dedup.duplicateClusters, which frees its checkpoints
+    // with Dataset.unpersist (a no-op on local checkpoints)
+  }
 }

@@ -149,4 +149,33 @@ class PrunedScanRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(q.schema == withRuleOff(q.schema))
     assert(q.collect().toSeq == withRuleOff(q.collect().toSeq))
   }
+
+  test("consecutive explode narrows the array-of-structs read below rule-off") {
+    // perfbench's consecutive_explode shape: explode an array of
+    // structs, explode one struct field's array, group by another field;
+    // col3 is never read
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val path = s"$dir/complex.parquet"
+    spark.range(40).select(col("id"),
+      array((1 to 3).map(i => struct((col("id") % 7 + i).as("col1"),
+        array(col("id") * i, col("id") + i).as("col2"),
+        (col("id") * 10 + i).as("col3"))): _*).as("someArrayOfComplexArrays"))
+      .write.mode("overwrite").parquet(path)
+    def run(): (Set[org.apache.spark.sql.Row], Int) = {
+      spark.read.parquet(path).createOrReplaceTempView("complex_nested")
+      val q = spark.sql("""SELECT c.col1 AS a, sum(y) AS s
+        FROM complex_nested LATERAL VIEW explode(someArrayOfComplexArrays) t AS c
+        LATERAL VIEW explode(c.col2) t2 AS y GROUP BY c.col1""")
+      val leaves = q.queryExecution.sparkPlan.collect {
+        case s: FileSourceScanExec => PlanRewriter.leafCount(s.requiredSchema)
+      }
+      assert(leaves.size == 1, q.queryExecution.sparkPlan.toString)
+      (q.collect().toSet, leaves.head)
+    }
+    val (offRows, offLeaves) = withRuleOff(run())
+    val (onRows, onLeaves) = run()
+    assert(onRows.nonEmpty && onRows == offRows)
+    assert(onLeaves < offLeaves,
+      s"rule read $onLeaves leaves, rule-off read $offLeaves")
+  }
 }
