@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 /** Optimization-round measurement tool (guide §1/§7): run selected
@@ -8,10 +9,14 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
   * scheduled-task time vs driver-side overhead (planning + codegen +
   * job submission). Prints one line per query:
   *
-  *   name wall_s jobs stages tasks taskTime_s gc_s shuffleRead_MB shuffleWrite_MB
+  *   name wall_s jobs sql stages tasks taskTime_s gc_s shuffleRead_MB shuffleWrite_MB
   *
-  * A query whose taskTime_s << wall_s * cores is scheduling/planning
-  * bound, not compute bound — the two need different fixes.
+  * `jobs` and `sql` (SQL executions started — the eager actions, each
+  * with its AQE sub-executions) are the minimum over the attempts, since
+  * AQE query-stage jobs vary from run to run; the other columns are the
+  * fastest attempt's. A query whose taskTime_s << wall_s * cores is
+  * scheduling/planning bound, not compute bound — the two need different
+  * fixes.
   * Not a driver surface; never run by the driver.
   *
   * Usage: runMain graft.Profile q1,q2,... [attempts]
@@ -36,6 +41,7 @@ object Profile {
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val jobs = new AtomicInteger(0)
+    val sqlExecs = new AtomicInteger(0)
     val stages = new AtomicInteger(0)
     val tasks = new AtomicInteger(0)
     val taskTime = new AtomicLong(0L)   // executorRunTime ms
@@ -45,6 +51,10 @@ object Profile {
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
         jobs.incrementAndGet()
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart => sqlExecs.incrementAndGet()
+        case _ => ()
+      }
       override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
         stages.incrementAndGet()
         tasks.addAndGet(s.stageInfo.numTasks)
@@ -69,15 +79,17 @@ object Profile {
       try graft.queries.Queries.t(spark, sfDir, n).count()
       catch { case scala.util.control.NonFatal(_) => () }
     }
-    println(f"${"name"}%-28s ${"wall_s"}%8s ${"jobs"}%5s ${"stg"}%5s ${"tasks"}%6s ${"taskT_s"}%8s ${"gc_s"}%6s ${"shR_MB"}%7s ${"shW_MB"}%7s")
+    println(f"${"name"}%-28s ${"wall_s"}%8s ${"jobs"}%5s ${"sql"}%5s ${"stg"}%5s ${"tasks"}%6s ${"taskT_s"}%8s ${"gc_s"}%6s ${"shR_MB"}%7s ${"shW_MB"}%7s")
     names.foreach { name =>
       SparkEntry.queries.get(name) match {
         case None => System.err.println(s"[profile] unknown query $name")
         case Some(fn) =>
-          var best: Option[(Double, Int, Int, Int, Double, Double, Double, Double)] = None
+          var best: Option[(Double, Int, Int, Double, Double, Double, Double)] = None
+          var minJobs = Int.MaxValue
+          var minSql = Int.MaxValue
           (1 to attempts).foreach { _ =>
             sweep()
-            jobs.set(0); stages.set(0); tasks.set(0)
+            jobs.set(0); sqlExecs.set(0); stages.set(0); tasks.set(0)
             taskTime.set(0); gcTime.set(0); shufR.set(0); shufW.set(0)
             val t0 = System.nanoTime()
             try {
@@ -85,16 +97,18 @@ object Profile {
               val wall = (System.nanoTime() - t0) / 1e9
               // listener events are async; give the bus a beat
               Thread.sleep(200)
-              val rec = (wall, jobs.get, stages.get, tasks.get,
+              val rec = (wall, stages.get, tasks.get,
                 taskTime.get / 1e3, gcTime.get / 1e3,
                 shufR.get / 1e6, shufW.get / 1e6)
               if (best.forall(_._1 > wall)) best = Some(rec)
+              minJobs = math.min(minJobs, jobs.get)
+              minSql = math.min(minSql, sqlExecs.get)
             } catch { case e: Throwable =>
               System.err.println(s"[profile] $name failed: ${e.getMessage}")
             }
           }
-          best.foreach { case (w, j, s, t, tt, gc, sr, sw) =>
-            println(f"$name%-28s $w%8.3f $j%5d $s%5d $t%6d $tt%8.2f $gc%6.2f $sr%7.1f $sw%7.1f")
+          best.foreach { case (w, s, t, tt, gc, sr, sw) =>
+            println(f"$name%-28s $w%8.3f $minJobs%5d $minSql%5d $s%5d $t%6d $tt%8.2f $gc%6.2f $sr%7.1f $sw%7.1f")
           }
       }
     }

@@ -362,7 +362,7 @@ object Analytics {
       .select(col("g"), col("q"), col("rank"), col("bucket"),
         col("estimate"))
       .localCheckpoint(true)
-    mat.unpersist()
+    Iterate.release(mat)
     out
   }
 
@@ -717,7 +717,7 @@ object Analytics {
       .orderBy(col("cos").desc, col("i"), col("j"))
       .limit(topN)
       .localCheckpoint(true)
-    ok.unpersist()
+    Iterate.release(ok)
     res
   }
 

@@ -85,23 +85,25 @@ object Classifier {
     // round references w twice (margin join + update join) so every
     // round's weight table materializes eagerly (vocab-sized, cheap —
     // the kCore discipline, not pageRank's lazy chaining)
-    var w = feats.select(col("bucket")).distinct()
+    val w0 = feats.select(col("bucket")).distinct()
       .withColumn("w", lit(0.0)).localCheckpoint(true)
     var bias = 0.0
-    var i = 0
-    while (i < rounds) {
+    val sp = docs.sparkSession
+    import sp.implicits._
+    val out = Iterate.eager(w0, rounds, Some(w0), identity) { (w, _) =>
       val margins = feats.join(broadcast(w), Seq("bucket"))
         .groupBy(col("doc_id"))
         .agg(sum(col("w").cast(DecimalType(28, 12))).as("_graft_ms"))
       // errs feeds TWO consumers (bucket gradients + the bias gradient):
       // left lazy, the margins join + aggregation above would execute
-      // twice per round — materialize the per-doc residuals once
-      val errs = labels.join(margins, Seq("doc_id"), "left_outer")
+      // twice per round — materialize the per-doc residuals once (round
+      // scratch: freed once the next weight table has materialized)
+      val errs = Iterate.scratch(labels.join(margins, Seq("doc_id"), "left_outer")
         .withColumn("_graft_m",
           lit(bias) + coalesce(col("_graft_ms").cast(DoubleType), lit(0.0)))
         .select(col("doc_id"),
           (fastSigmoid(col("_graft_m")) - col("y")).as("_graft_err"))
-        .localCheckpoint(true)
+        .localCheckpoint(true))
       val grads = feats.join(errs, Seq("doc_id"))
         .groupBy(col("bucket"))
         .agg(sum(col("_graft_err").cast(DecimalType(28, 12))).as("_graft_g"))
@@ -110,23 +112,14 @@ object Classifier {
           .cast(DoubleType).as("g"))
         .collect().head.getDouble(0)
       bias = round12(bias - lr * gBias / nDocs.toDouble)
-      val next = w.join(grads, Seq("bucket"), "left_outer")
+      w.join(grads, Seq("bucket"), "left_outer")
         .select(col("bucket"),
           round(col("w") - lit(lr) *
             coalesce(col("_graft_g").cast(DoubleType), lit(0.0)) /
             lit(nDocs.toDouble), 12).as("w"))
-        .localCheckpoint(true)
-      errs.unpersist()
-      w.unpersist()
-      w = next
-      i += 1
-    }
-    val sp = docs.sparkSession
-    import sp.implicits._
-    val out = w.select(col("bucket"), col("w").as("weight"))
-      .unionAll(Seq((-1L, bias)).toDF("bucket", "weight"))
-      .localCheckpoint(true)
-    w.unpersist(); feats.unpersist(); labels.unpersist()
+    }.finish(_.select(col("bucket"), col("w").as("weight"))
+      .unionAll(Seq((-1L, bias)).toDF("bucket", "weight")))
+    Iterate.release(feats, labels)
     out
   }
 
@@ -217,7 +210,7 @@ object Classifier {
       .select(col("bucket"), col("n"), col("mean_score"),
         col("obs_rate"), col("abs_gap"), col("ece"))
       .localCheckpoint(true)
-    per.unpersist()
+    Iterate.release(per)
     out
   }
 
@@ -259,7 +252,7 @@ object Classifier {
       .select(col("group"), col("n"), col("positives"), col("rate"),
         col("impact_ratio"), col("passes_four_fifths"))
       .localCheckpoint(true)
-    per.unpersist()
+    Iterate.release(per)
     out
   }
 
@@ -320,7 +313,7 @@ object Classifier {
           (coalesce(col("tot"), lit(0L)) + lit(nBuckets)).cast(DoubleType)),
           9).as("logp"))
     val out = seen.unionAll(prior).unionAll(unseen).localCheckpoint(true)
-    feats.unpersist()
+    Iterate.release(feats)
     out
   }
 
@@ -393,8 +386,9 @@ object Classifier {
 
   /** End-to-end language-ID CONFUSION MATRIX: train on one deterministic
     * split, predict the other, count `(lang, pred_lang, n_docs)` — the
-    * [[t02-style]] evaluation frame for the TRAINED model. The feats
-    * unpersist after both consumers resolve. */
+    * [[t02-style]] evaluation frame for the TRAINED model. Training
+    * materializes its model and frees its own feature blocks
+    * ([[trainLangId]]). */
   def langIdConfusion(train: DataFrame, eval: DataFrame, idCol: String,
       textCol: String, langCol: String, nBuckets: Int = 2048): DataFrame = {
     val model = trainLangId(train, idCol, textCol, langCol, nBuckets)

@@ -83,9 +83,10 @@ object Dedup {
     * calls also skip the df-count + anti-join stages entirely.
     *
     * The returned frame is EAGERLY materialized (`localCheckpoint`) so the
-    * corpus-sized postings blocks can be freed before returning — pairs
-    * are output-sized, tiny by comparison. Callers holding long sessions
-    * own the returned frame's `unpersist()`. */
+    * corpus-sized postings blocks can be freed ([[Iterate.release]])
+    * before returning — pairs are output-sized, tiny by comparison.
+    * Callers holding long sessions free the returned checkpoint with
+    * [[Iterate.release]]. */
   def jaccardPairs(df: DataFrame, idCol: String, textCol: String, tau: Double,
       maxDf: Int = Int.MaxValue): DataFrame = {
     // the postings kernel (tokenize + shingle every document) feeds FOUR
@@ -112,7 +113,7 @@ object Dedup {
       .filter(col("jac") >= tau)
       .select(col("id1"), col("id2"), col("jac"))
       .localCheckpoint(true)
-    inv.unpersist() // postings done; only the output-sized result stays cached
+    Iterate.release(inv) // postings done; only the output-sized result stays cached
     pairs
   }
 
@@ -149,7 +150,7 @@ object Dedup {
       .filter(col("containment") >= tau)
       .select(col("id1"), col("id2"), col("containment"))
       .localCheckpoint(true)
-    inv.unpersist()
+    Iterate.release(inv)
     pairs
   }
 
@@ -181,7 +182,7 @@ object Dedup {
     val sizes = inv.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     val (lazyCands, prefix) = prefixCandidates(inv, sizes, tau)
     val cands = lazyCands.localCheckpoint(true)
-    prefix.unpersist()
+    Iterate.release(prefix)
     val common = cands
       .join(inv.select(col("doc_id").as("id1"), col("s")), Seq("id1"))
       .join(inv.select(col("doc_id").as("id2"), col("s")), Seq("id2", "s"))
@@ -193,15 +194,14 @@ object Dedup {
       .filter(col("jac") >= tau)
       .select(col("id1"), col("id2"), col("jac"))
       .localCheckpoint(true)
-    inv.unpersist()
-    cands.unpersist()
+    Iterate.release(inv, cands)
     out
   }
 
   /** [[prefixJaccardPairs]]'s candidate stage, test-visible so the
     * candidate-reduction claim is MEASURED, not asserted: returns (lazy
-    * candidate pairs, the checkpointed prefix postings the caller must
-    * unpersist). */
+    * candidate pairs, the checkpointed prefix postings the caller frees
+    * with [[Iterate.release]] once the candidates have materialized). */
   private[graft] def prefixCandidates(inv: DataFrame, sizes: DataFrame,
       tau: Double): (DataFrame, DataFrame) = {
     val dfc = inv.groupBy(col("s")).agg(count(lit(1)).as("df"))
@@ -236,22 +236,23 @@ object Dedup {
     * calls also skip the bucket-count + anti-join stages entirely.
     *
     * The returned frame is EAGERLY materialized (`localCheckpoint`) so the
-    * banded-signature blocks can be freed before returning — candidates
-    * are output-sized. Callers holding long sessions own the returned
-    * frame's `unpersist()`. */
+    * banded-signature blocks can be freed ([[Iterate.release]]) before
+    * returning — candidates are output-sized. Callers holding long
+    * sessions free the returned checkpoint with [[Iterate.release]]. */
   def minhashCandidates(df: DataFrame, idCol: String, textCol: String,
       k: Int = 16, r: Int = 4, bucketCap: Int = Int.MaxValue): DataFrame = {
     val (lazyCands, allBands) = minhashCandidatesLazy(df, idCol, textCol, k, r, bucketCap)
     val cands = lazyCands.localCheckpoint(true)
-    allBands.unpersist() // signatures done; only the candidate set stays cached
+    Iterate.release(allBands) // signatures done; only the candidate set stays cached
     cands
   }
 
   /** [[minhashCandidates]] before its final eager materialization: returns
     * (candidates with full lineage, the checkpointed band frame the caller
-    * must unpersist after consuming them). Exists so plan-quality specs can
-    * assert the candidate join's physical shape — `localCheckpoint`
-    * truncates lineage to a `Scan ExistingRDD`, hiding the join. */
+    * frees with [[Iterate.release]] once the candidates have materialized).
+    * Exists so plan-quality specs can assert the candidate join's physical
+    * shape — `localCheckpoint` truncates lineage to a `Scan ExistingRDD`,
+    * hiding the join. */
   private[graft] def minhashCandidatesLazy(df: DataFrame, idCol: String, textCol: String,
       k: Int, r: Int, bucketCap: Int): (DataFrame, DataFrame) = {
     // banded signatures feed the hot-bucket cap and both self-join sides;
@@ -489,7 +490,7 @@ object Dedup {
       .select(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"))
       .distinct()
     val out = duplicateSpansWithin(df, cand, idCol, textCol, k, minLen, dfCap)
-    fpsCapped.unpersist()
+    Iterate.release(fpsCapped)
     out
   }
 
@@ -709,7 +710,7 @@ object Dedup {
       .select(col("id1"), col("id2"), col("matches"), col("est"),
         col("jac"), col("abs_err"))
       .localCheckpoint(true)
-    inv.unpersist(); sigs.unpersist()
+    Iterate.release(inv, sigs, cands)
     out
   }
 
@@ -846,8 +847,11 @@ object Dedup {
     * sharing no direct pair edge still cluster (A~B, B~C ⇒ {A,B,C}) —
     * exactly what pair-level dedup cannot express.
     *
-    * The returned frame is the final round's eager checkpoint — callers
-    * holding long sessions own its `unpersist()`.
+    * The rounds run on [[Iterate.until]] (the changed-label count is the
+    * observed metric), which frees each round's predecessor checkpoint;
+    * the edge checkpoint is released before returning. The returned
+    * frame reads the final round's checkpoint — callers holding long
+    * sessions free it with [[Iterate.release]].
     */
   def duplicateClusters(pairs: DataFrame, id1: String = "id1", id2: String = "id2",
       maxIter: Int = 20): DataFrame = {
@@ -856,19 +860,19 @@ object Dedup {
     // operator is called per contraction round by minimumSpanningForest
     // and per batch by the dedup family — a separate isEmpty action per
     // call was one driver round-trip each, pure overhead).
-    val eObs = org.apache.spark.sql.Observation()
-    val edges = pairs.select(col(id1).cast("long").as("src"), col(id2).cast("long").as("dst"))
-      .union(pairs.select(col(id2).cast("long").as("src"), col(id1).cast("long").as("dst")))
-      .distinct()
-      .observe(eObs, count(lit(1)).as("n"))
-      .localCheckpoint(true)
+    val (edges, nEdges) = Iterate.observe(
+      pairs.select(col(id1).cast("long").as("src"), col(id2).cast("long").as("dst"))
+        .union(pairs.select(col(id2).cast("long").as("src"), col(id1).cast("long").as("dst")))
+        .distinct(), count(lit(1)), 0L)
     val labels0 = edges.select(col("src").as("node")).distinct()
       .withColumn("label", col("node")).localCheckpoint(true)
-    var labelsCkpt = labels0
-    var labels = org.apache.spark.sql.graft.PlanBridge.statsFlatLeaf(labels0)
-    var iter = 0
-    var converged = eObs.get("n").asInstanceOf[Long] == 0L
-    while (!converged && iter < maxIter) {
+    var changed = nEdges // labels still moving until a round says otherwise
+    // stats-flat wrapper over the checkpointed rows: the label self-join
+    // must not square the carried estimate
+    val run = Iterate.until(org.apache.spark.sql.graft.PlanBridge.statsFlatLeaf(labels0),
+        if (nEdges == 0L) 0 else maxIter,
+        sum(when(col("label") =!= col("prev"), 1L).otherwise(0L)), 0L,
+        Some(labels0)) { (labels, _) =>
       // Round-16 (guide §2.4 "remove shuffles outright"): the neighbor
       // candidates and the pointer-jump term used to be TWO equi-joins
       // (edges ⋈ labels on src, labels ⋈ labels on via) — two probe-side
@@ -886,37 +890,24 @@ object Dedup {
         .select(col("to").as("node"), col("label"))
       // Convergence detection rides the SAME aggregation that computes the
       // new labels: each node's own previous label is tagged into the union
-      // and recovered as min(own label), and an observed metric counts the
+      // and recovered as min(own label), and the observed metric counts the
       // nodes whose label moved — collected during the checkpoint action
       // itself, so each round is exactly ONE Spark job (the old formulation
       // paid a second join+count action per round).
-      val obs = org.apache.spark.sql.Observation()
-      val next = labels.select(col("node"), col("label"), lit(true).as("own"))
+      labels.select(col("node"), col("label"), lit(true).as("own"))
         .union(flowed.select(col("node"), col("label"), lit(false).as("own")))
         .groupBy(col("node"))
         .agg(min(col("label")).as("label"),
           min(when(col("own"), col("label"))).as("prev"))
-        .observe(obs, sum(when(col("label") =!= col("prev"), 1L).otherwise(0L)).as("changed"))
-        .select(col("node"), col("label"))
-        .localCheckpoint(true)
-      val changed = obs.get("changed").asInstanceOf[Long]
-      labelsCkpt.unpersist() // free the previous round's checkpoint blocks NOW
-      labelsCkpt = next
-      // stats-flat wrapper over the SAME checkpointed rows: the next
-      // round's label self-join must not square the carried estimate
-      labels = org.apache.spark.sql.graft.PlanBridge.statsFlatLeaf(next)
-      converged = changed == 0
-      iter += 1
-    }
-    edges.unpersist() // the result's lineage is truncated — edges are done
+    } { c => changed = c; c == 0L }
+    Iterate.release(edges) // the result's lineage is truncated — edges are done
     // unconverged labels under-merge (a component keeps several ids) —
     // returning them silently would let duplicates through downstream
-    require(converged,
+    require(changed == 0L,
       s"connected components did not converge in $maxIter rounds " +
         "(component diameter > 2^maxIter?) — raise maxIter")
-    // return rides the final CHECKPOINT (not the stats-flat wrapper), so
-    // the caller-owns-unpersist contract is unchanged
-    labelsCkpt.select(col("node").as("doc_id"), col("label").as("cluster_id"))
+    // return rides the final CHECKPOINT (not the stats-flat wrapper)
+    run.held.get.select(col("node").as("doc_id"), col("label").as("cluster_id"))
   }
 
   /** Bloom-filter MEMBERSHIP flagging: build a Bloom filter over

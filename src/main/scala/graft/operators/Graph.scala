@@ -291,15 +291,6 @@ object Graph {
     result.select(col("node"), col("r").as("rank"))
   }
 
-  /** Test-visible count of rounds the last [[Iterate]] loop on this JVM
-    * actually ran (e.g. a [[pageRank]] / [[personalizedPageRank]] /
-    * [[kCore]] call) — the convergence specs pin that an
-    * already-converged graph stops early (meaningful in local mode; same
-    * contract as the other gauges). */
-  private[operators] object ConvergenceGauge {
-    @volatile var lastRounds: Int = -1
-  }
-
   /** Connected components over an undirected edge list: one row
     * `(node, component)` per node, where `component` is the smallest
     * node id reachable from it. Thin graph-API face of
@@ -1739,7 +1730,7 @@ object Graph {
         round(num.cast("double") / den.cast("double"), 6))
         .as("assortativity"))
       .localCheckpoint(true) // materialize before releasing the edge frame
-    und.unpersist()
+    Iterate.release(und)
     res
   }
 

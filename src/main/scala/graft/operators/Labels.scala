@@ -137,7 +137,7 @@ object Labels {
     val out = agreementFromNeighbors(neighbors, corpus)
       .join(classifyFromNeighbors(neighbors, corpus), Seq("vec_id"))
       .localCheckpoint(true) // output-sized (one row per audited vector)
-    neighbors.unpersist()
+    Iterate.release(neighbors)
     out
   }
 }

@@ -224,8 +224,7 @@ object Layout {
     val existing = spark.read.parquet(manifestPath).localCheckpoint(true)
     val known = existing.select(col("file")).collect().map(_.getString(0)).toSet
     val fresh = spark.read.parquet(dataPath).inputFiles.filterNot(known)
-    if (fresh.isEmpty) { existing.unpersist(); 0L }
-    else {
+    if (fresh.nonEmpty) {
       val newStats = spark.read.parquet(fresh.toIndexedSeq: _*)
         .groupBy(input_file_name().as("file"))
         .agg(count(lit(1)).as("n_rows"),
@@ -234,9 +233,9 @@ object Layout {
       existing.unionByName(newStats)
         .coalesce(1)
         .write.mode("overwrite").parquet(manifestPath)
-      existing.unpersist()
-      fresh.length.toLong
     }
+    Iterate.release(existing)
+    fresh.length.toLong
   }
 
   /** Name of the Bloom-manifest subdirectory (metadata-prefixed). */
@@ -340,8 +339,7 @@ object Layout {
     }
     val known = existing.select(col("file")).collect().map(_.getString(0)).toSet
     val fresh = spark.read.parquet(dataPath).inputFiles.filterNot(known)
-    if (fresh.isEmpty) { existing.unpersist(); 0L }
-    else {
+    if (fresh.nonEmpty) {
       val ba = udaf(bloomAgg(bitsLog2, nHashes))
       val newRows = spark.read.parquet(fresh.toIndexedSeq: _*)
         .select(input_file_name().as("file"), col(colName).cast("string").as("v"))
@@ -350,9 +348,9 @@ object Layout {
       existing.unionByName(newRows)
         .coalesce(1)
         .write.mode("overwrite").parquet(manifestPath)
-      existing.unpersist()
-      fresh.length.toLong
     }
+    Iterate.release(existing)
+    fresh.length.toLong
   }
 
   /** Point-lookup scan pruned by the Bloom manifest: a file is read iff

@@ -58,8 +58,8 @@ object Pca {
   def pcaPowerComponent(embeddings: DataFrame, rounds: Int = 3): DataFrame = {
     require(rounds >= 1, "need at least one power-iteration round")
     val (xc, _) = centered(embeddings)
-    val out = iterate(xc, rounds)
-    xc.unpersist()
+    val out = iterate(xc, rounds).state
+    Iterate.release(xc)
     out
   }
 
@@ -69,44 +69,37 @@ object Pca {
   def pcaPowerProject(embeddings: DataFrame, rounds: Int = 3): DataFrame = {
     require(rounds >= 1, "need at least one power-iteration round")
     val (xc, _) = centered(embeddings)
-    val v = iterate(xc, rounds)
-    val out = xc.join(broadcast(v), Seq("dim"))
+    val out = iterate(xc, rounds).finish(v => xc.join(broadcast(v), Seq("dim"))
       .groupBy(col("vec_id"))
       .agg(round(sum((col("xc") * col("v")).cast(Dec)).cast(DoubleType), 6)
-        .as("pc1"))
-      .localCheckpoint(true)
-    xc.unpersist()
+        .as("pc1")))
+    Iterate.release(xc)
     out
   }
 
-  private def iterate(xc: DataFrame, rounds: Int): DataFrame = {
+  private def iterate(xc: DataFrame, rounds: Int): Iterate.Run = {
     // v₀ = e₁: deterministic, engine-portable; each round's component
     // materializes eagerly (d-row, cheap) because the next round
     // references it twice
-    var v = xc.select(col("dim")).distinct()
+    val v0 = xc.select(col("dim")).distinct()
       .select(col("dim"),
         when(col("dim") === 1, lit(1.0)).otherwise(lit(0.0)).as("v"))
       .localCheckpoint(true)
-    var i = 0
-    while (i < rounds) {
+    Iterate.eager(v0, rounds, Some(v0), identity) { (v, _) =>
       val s = xc.join(broadcast(v), Seq("dim"))
         .groupBy(col("vec_id"))
         .agg(sum((col("xc") * col("v")).cast(Dec)).cast(DoubleType).as("s"))
-      val w = xc.join(s, Seq("vec_id"))
+      // round scratch: freed once the normalized component materializes
+      val w = Iterate.scratch(xc.join(s, Seq("vec_id"))
         .groupBy(col("dim"))
         .agg(sum((col("s") * col("xc")).cast(Dec)).cast(DoubleType).as("w"))
-        .localCheckpoint(true)
+        .localCheckpoint(true))
       val n2 = w.agg(sum((col("w") * col("w")).cast(Dec)).cast(DoubleType))
         .collect().head.getDouble(0)
       require(n2 > 0.0,
         "power iterate collapsed to zero — degenerate corpus or init")
       val nrm = math.sqrt(n2)
-      val next = w.select(col("dim"), round(col("w") / lit(nrm), 12).as("v"))
-        .localCheckpoint(true)
-      v.unpersist(); w.unpersist()
-      v = next
-      i += 1
+      w.select(col("dim"), round(col("w") / lit(nrm), 12).as("v"))
     }
-    v
   }
 }

@@ -553,8 +553,7 @@ object Similarity {
       .filter(col("rank") <= k)
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("cs"))
       .localCheckpoint(true) // materialize (k rows/query) before freeing the stages
-    sigs.unpersist()
-    codes.unpersist()
+    Iterate.release(sigs, codes)
     result
   }
 
@@ -1526,7 +1525,7 @@ object Similarity {
         keep.unionByName(fr.select(keep.columns.map(col).toIndexedSeq: _*)))
         .localCheckpoint(true) // manifest is read back below from its own path
       updated.coalesce(1).write.mode("overwrite").parquet(manifestPath)
-      updated.unpersist()
+      Iterate.release(updated)
     }
     fs.delete(new org.apache.hadoop.fs.Path(s"$path/$TombstoneDir"), true)
     rewritten
@@ -1730,7 +1729,7 @@ object Similarity {
     val g = org.apache.spark.sql.graft.PlanBridge.statsFlatLeaf(graphCkpt)
     val res = nswSearch(queries, corpus, entryNodes, k, beam, rounds,
       (_: Array[Long]) => g)
-    graphCkpt.unpersist()
+    Iterate.release(graphCkpt)
     res
   }
 
@@ -1964,9 +1963,9 @@ object Similarity {
   /** `rounds` fixed expansion rounds from an ALREADY-SCORED (eagerly or
     * LAZILY checkpointed) `(query_id, node, cs)` visited state: returns
     * the final visited CHECKPOINT, MATERIALIZED (the input itself when
-    * `rounds == 0` — the caller owns unpersisting the returned frame;
-    * every superseded intermediate, including the input, is unpersisted
-    * here).
+    * `rounds == 0`). The loop is [[Iterate.deferred]], which frees every
+    * superseded checkpoint, the input included; the caller frees the
+    * returned one ([[nswRank]] does).
     *
     * Round-15 serve-cost shape — ONE Spark job per round: the per-query
     * top-beam frontier is COLLECTED (≤ queries × beam rows, both bounded
@@ -1977,9 +1976,9 @@ object Similarity {
     * BROADCAST literal relation — replacing the old frontier recompute
     * + eager per-round checkpoint pair (two jobs + a shuffled join).
     * Each round's new visited state is a LAZY local checkpoint that the
-    * NEXT round's collect (or the final materialization below)
-    * executes; values are untouched — same window, same tie-breaks,
-    * same joins — so every graph-ANN canon is byte-identical. */
+    * NEXT round's collect (or the final `count`) executes; values are
+    * untouched — same window, same tie-breaks, same joins — so every
+    * graph-ANN canon is byte-identical. */
   private def nswExpand(
       qb: org.apache.spark.broadcast.Broadcast[Array[(Long, Array[Float])]],
       corpusVecs: DataFrame, visited0: DataFrame, beam: Int, rounds: Int,
@@ -1988,19 +1987,15 @@ object Similarity {
     import sp.implicits._
     val wBeam = Window.partitionBy(col("query_id"))
       .orderBy(col("cs").desc, col("node"))
-    var ckpt = visited0                  // newest checkpoint (lifecycle)
-    var visited = ckpt                   // plan-side (stats-flat) handle
-    var older: DataFrame = null          // predecessor awaiting unpersist
-    var r = 0
-    while (r < rounds) {
+    // visited is referenced twice per round (anti-join + union): each
+    // checkpoint is re-wrapped stats-flat so estimates never compound
+    Iterate.deferred(visited0, rounds, Some(visited0)) { (visited, _) =>
       // the round's ONE driver action: collecting the frontier runs the
-      // pending lazy checkpoint of `ckpt`, after which its predecessor
-      // (read during that materialization) is safe to drop
+      // pending lazy checkpoint under `visited`
       val frontierRows = visited
         .withColumn("_b", row_number().over(wBeam))
         .filter(col("_b") <= beam).select(col("query_id"), col("node"))
         .as[(Long, Long)].collect()
-      if (older != null) { older.unpersist(); older = null }
       val g = edgesForIds(frontierRows.map(_._2).distinct.sorted)
       val frontier = broadcast(
         frontierRows.toIndexedSeq.toDF("query_id", "node"))
@@ -2018,30 +2013,17 @@ object Similarity {
             (qid, nid, cosineKernel(qm(qid), v))
           }
         }.toDF("query_id", "node", "cs")
-      val next = visited.unionAll(scored).localCheckpoint(false)
-      older = ckpt
-      ckpt = next
-      // visited is referenced twice per round (anti-join + union):
-      // flatten carried stats so estimates never compound (PlanBridge)
-      visited = org.apache.spark.sql.graft.PlanBridge.statsFlatLeaf(next)
-      r += 1
-    }
-    if (older != null) {
-      // force the trailing lazy checkpoint so the returned frame is
-      // self-contained, then drop its (cached) predecessor
-      ckpt.count()
-      older.unpersist()
-    }
-    ckpt
+      visited.unionAll(scored)
+    }.held.get
   }
 
   /** Per-query top-`k` of a visited checkpoint (self excluded — it only
-    * ever navigates): materializes the result eagerly and unpersists the
-    * input checkpoint. `exclude` ids are SOFT-DELETED nodes: they stay
-    * in the search state (routing through them keeps the graph
-    * connected — the FAISS/Vespa soft-delete convention) but never
-    * surface in a result, and the next-best visited node fills their
-    * rank. */
+    * ever navigates): materializes the result eagerly and releases the
+    * input checkpoint ([[Iterate.release]]). `exclude` ids are
+    * SOFT-DELETED nodes: they stay in the search state (routing through
+    * them keeps the graph connected — the FAISS/Vespa soft-delete
+    * convention) but never surface in a result, and the next-best
+    * visited node fills their rank. */
   private def nswRank(visitedCkpt: DataFrame, k: Int,
       exclude: Seq[Long] = Nil): DataFrame = {
     val wBeam = Window.partitionBy(col("query_id"))
@@ -2056,7 +2038,7 @@ object Similarity {
       .select(col("query_id"), col("rank"), col("node").as("neighbor_id"),
         col("cs"))
       .localCheckpoint(true)
-    visitedCkpt.unpersist()
+    Iterate.release(visitedCkpt)
     result
   }
 
@@ -2145,10 +2127,10 @@ object Similarity {
       val g = org.apache.spark.sql.graft.PlanBridge.statsFlatLeaf(gCkpt)
       visited = nswExpand(qb, corpusVecs, visited, beam, rounds,
         (_: Array[Long]) => g)
-      gCkpt.unpersist()
+      Iterate.release(gCkpt)
     }
     val res = nswRank(visited, k)
-    asg.unpersist()
+    Iterate.release(asg)
     res
   }
 
@@ -2222,7 +2204,7 @@ object Similarity {
         scala.concurrent.duration.Duration.Inf)
     } finally {
       pool.shutdown()
-      asg.unpersist()
+      Iterate.release(asg)
     }
   }
 
@@ -2281,7 +2263,7 @@ object Similarity {
     if (appendedBase > 0) {
       val asg = nswAssign(corpus, cents).localCheckpoint(true)
       writeHnswEntries(asg, path, strides(maxLevel), maxCents, entryQuota)
-      asg.unpersist()
+      Iterate.release(asg)
     }
     appendedBase
   }
@@ -2386,7 +2368,7 @@ object Similarity {
       .agg(min(col("vec_id")).as("node_id")).select(col("node_id"))
     val entries = scattered.union(perCell).distinct()
     val res = nswKnnOn(queries, corpus, graph, entries, k, beam, rounds)
-    asg.unpersist()
+    Iterate.release(asg)
     res
   }
 
@@ -2528,9 +2510,9 @@ object Similarity {
           .write.mode("append").parquet(graphPath)
         graft.operators.Layout.updateManifest(sp, graphPath, Seq("node_id"))
       }
-      newAsg.unpersist()
+      Iterate.release(newAsg)
       appended
-    } finally asg.unpersist()
+    } finally Iterate.release(asg)
   }
 
   /** Per-group embedding centroids, fully relational: posexplode each

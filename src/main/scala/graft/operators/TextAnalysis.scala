@@ -342,13 +342,14 @@ object TextAnalysis {
   def tfidfTopTerms(df: DataFrame, idCol: String, textCol: String, k: Int): DataFrame = {
     val (lazyOut, termCounts) = tfidfTopTermsLazy(df, idCol, textCol, k)
     val out = lazyOut.localCheckpoint(true) // output-sized (k rows per doc)
-    termCounts.unpersist()
+    Iterate.release(termCounts)
     out
   }
 
   /** [[tfidfTopTerms]] before its final eager materialization: returns
     * (result with full lineage, the checkpointed term-count frame the
-    * caller must unpersist) so plan-quality specs can assert the
+    * caller frees with [[Iterate.release]] once the result has
+    * materialized) so plan-quality specs can assert the
     * partial-aggregation shapes — `localCheckpoint` truncates lineage
     * to a `Scan ExistingRDD`, hiding them. */
   private[graft] def tfidfTopTermsLazy(df: DataFrame, idCol: String,
@@ -586,13 +587,13 @@ object TextAnalysis {
           trim(replace(concat(lit(" "), col("seg"), lit(" ")),
             lit(s" $l  $r "), lit(s" $l$r "))).as("seg"))
           .localCheckpoint(true) // truncate the per-round rewrite lineage
-        vocab.unpersist()
+        Iterate.release(vocab)
         vocab = next
         rank += 1
       }
     }
     }
-    vocab.unpersist()
+    Iterate.release(vocab)
     merges.toSeq.toDF("rank", "lhs", "rhs", "cnt")
   }
 
@@ -713,7 +714,7 @@ object TextAnalysis {
         // action — measured 7.4s -> ~5s for 12 rounds at sf0.1)
         if (round % 4 == 3) {
           val next = rewritten.localCheckpoint(true)
-          lastCkpt.unpersist()
+          Iterate.release(lastCkpt)
           lastCkpt = next
           vocab = next
         } else vocab = rewritten
@@ -721,7 +722,7 @@ object TextAnalysis {
       round += 1
     }
     }
-    lastCkpt.unpersist()
+    Iterate.release(lastCkpt)
     merges.toSeq.toDF("rank", "lhs", "rhs", "cnt")
   }
 
@@ -873,13 +874,13 @@ object TextAnalysis {
           trim(replace(concat(lit(" "), col("seg"), lit(" ")),
             lit(s" $l  $r "), lit(s" $l$r "))).as("seg"))
           .localCheckpoint(true)
-        vocab.unpersist()
+        Iterate.release(vocab)
         vocab = next
         rank += 1
       }
     }
     }
-    vocab.unpersist()
+    Iterate.release(vocab)
     merges.toSeq.toDF("rank", "lhs", "rhs", "cnt", "raw_score")
       .select(col("rank"), col("lhs"), col("rhs"), col("cnt"),
         round(col("raw_score"), 6).as("score"))
@@ -1005,7 +1006,7 @@ object TextAnalysis {
       .localCheckpoint(true)
     val occAll = unigramOccAll(words, maxPieceLen).localCheckpoint(true)
     // TakeOrdered top-k (q18 discipline) — never a global window
-    var vocab = initVocab match {
+    val vocab0 = initVocab match {
       case Some(iv) => iv.select(col("piece"), col("freq"))
         .localCheckpoint(true)
       case None =>
@@ -1016,39 +1017,38 @@ object TextAnalysis {
             .orderBy(col("freq").desc, col("piece")).limit(vocabMulti))
           .localCheckpoint(true)
     }
-    var finalTot = 0L; var finalV = 0L
-    for (_ <- 1 to emRounds) {
+    // (total freq, vocab size) of a vocab state: the smoothing constants
+    def totals(vocab: DataFrame): (Long, Long) = {
       val tv = vocab.agg(coalesce(sum(col("freq")), lit(0L)),
         count(lit(1))).head()
-      val total = tv.getLong(0); val vsz = tv.getLong(1)
-      finalTot = total; finalV = vsz
+      (tv.getLong(0), tv.getLong(1))
+    }
+    // each round's occurrence lattice and Viterbi uses are checkpointed
+    // scratch, freed once the next vocab has materialized
+    val result = Iterate.eager(vocab0, emRounds, Some(vocab0), identity) { (vocab, _) =>
+      val (total, vsz) = totals(vocab)
       val scored = vocab.withColumn("logp",
         round(log((col("freq") + 1).cast("double") /
           lit((total + vsz).toDouble)), 6).cast(DecimalType(18, 6)))
-      val occ = occAll
+      val occ = Iterate.scratch(occAll
         .join(scored.select(col("piece"), col("logp")), Seq("piece"))
         .select(col("w"), col("cnt"), col("start"), col("end"),
           col("piece"), col("logp"))
-        .localCheckpoint(true)
-      val uses = viterbiUses(words, occ, maxPieceLen, maxWordLen)
+        .localCheckpoint(true))
+      val uses = Iterate.scratch(viterbiUses(occ))
       val counts = uses.groupBy(col("piece")).agg(sum(col("cnt")).as("nfreq"))
-      val prevVocab = vocab
-      vocab = vocab.select(col("piece"))
+      vocab.select(col("piece"))
         .join(counts, Seq("piece"), "left_outer")
         .select(col("piece"), coalesce(col("nfreq"), lit(0L)).as("freq"))
         .filter(length(col("piece")) === 1 || col("freq") > 0)
-        .localCheckpoint(true)
-      uses.unpersist(); occ.unpersist(); prevVocab.unpersist()
-    }
-    val tv = vocab.agg(coalesce(sum(col("freq")), lit(0L)),
-      count(lit(1))).head()
-    val total = tv.getLong(0); val vsz = tv.getLong(1)
-    val result = vocab.select(col("piece"),
+    }.finish { vocab =>
+      val (total, vsz) = totals(vocab)
+      vocab.select(col("piece"),
         length(col("piece")).as("piece_len"), col("freq"),
         round(log((col("freq") + 1).cast("double") /
           lit((total + vsz).toDouble)), 6).as("logp"))
-      .localCheckpoint(true)
-    vocab.unpersist(); occAll.unpersist(); words.unpersist()
+    }
+    Iterate.release(occAll, words)
     result
   }
 
@@ -1073,10 +1073,10 @@ object TextAnalysis {
     * traversal with the exact-DECIMAL equality test and start-asc
     * tie-break. Returns a CHECKPOINTED `(w, cnt, piece)` frame with one
     * row per piece USE in each word's best segmentation (the caller
-    * unpersists). Words whose end position is unreachable under `occ`
-    * (a char missing from the vocabulary) simply emit no rows. */
-  private def viterbiUses(words: DataFrame, occ: DataFrame,
-      maxPieceLen: Int, maxWordLen: Int): DataFrame = {
+    * frees it with [[Iterate.release]]). Words whose end position is
+    * unreachable under `occ` (a char missing from the vocabulary)
+    * simply emit no rows. */
+  private def viterbiUses(occ: DataFrame): DataFrame = {
     // Round-16 kernelization (guide §1.2 step 1 — fix the distributed
     // algorithm before the per-task work). The relational form ran the
     // forward DP + backward peel as ~2·maxWordLen driver-checkpointed
@@ -1093,9 +1093,6 @@ object TextAnalysis {
     // stream-twin argument, spec-pinned stream ≡ batch). Unreachable
     // words (out-of-vocab char) return an empty piece list and drop in
     // the explode, exactly like the old missing pos=len join row.
-    // `words`/`maxPieceLen`/`maxWordLen` stay in the signature for the
-    // callers' contract; the lattice itself bounds the DP.
-    val _ = (words, maxPieceLen, maxWordLen)
     val kernel = udf((w: String, lat: Seq[org.apache.spark.sql.Row]) =>
       viterbiPiecesKernel(w, lat))
     occ.groupBy(col("w"), col("cnt"))
@@ -1212,7 +1209,7 @@ object TextAnalysis {
       .select(col("w"), col("cnt"), col("start"), col("end"),
         col("piece"), col("logp"))
       .localCheckpoint(true)
-    val uses = viterbiUses(words, occ, maxPieceLen, maxWordLen)
+    val uses = viterbiUses(occ)
     val np = uses.groupBy(col("w")).agg(count(lit(1)).as("np"))
     val result = docWords
       .join(np, docWords("word") === np("w"), "left_outer")
@@ -1221,7 +1218,7 @@ object TextAnalysis {
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_words"), sum(col("np")).as("n_pieces"))
       .localCheckpoint(true)
-    uses.unpersist(); occ.unpersist(); words.unpersist()
+    Iterate.release(uses, occ, words)
     result
   }
 
@@ -1482,7 +1479,7 @@ object TextAnalysis {
         (col("_graft_ct") + col("n_tokens")).as("cum_tokens"),
         (col("_graft_cv") + col("new_words")).as("cum_vocab"))
       .localCheckpoint(true)
-    tok.unpersist()
+    Iterate.release(tok)
     out
   }
 
@@ -1538,7 +1535,7 @@ object TextAnalysis {
       // one row: eager-materialize BEFORE dropping the growth blocks
       // (growth's lineage is checkpoint-truncated — it cannot recompute)
       .localCheckpoint(true)
-    growth.unpersist()
+    Iterate.release(growth)
     out
   }
 
@@ -1716,7 +1713,7 @@ object TextAnalysis {
             .cast("double") /
             sum(col("cnt")).cast("double"), 6).as("mean_logprob"))
     val result = out.localCheckpoint(true)
-    corpus.unpersist()
+    Iterate.release(corpus)
     result
   }
 
@@ -1750,7 +1747,7 @@ object TextAnalysis {
       discount: Double = 0.75): DataFrame = {
     val (out, corpus) = knTrigramPlan(df, idCol, textCol, discount)
     val result = out.localCheckpoint(true)
-    corpus.unpersist()
+    Iterate.release(corpus)
     result
   }
 
@@ -2203,23 +2200,6 @@ object TextAnalysis {
       }).toDF("doc_id", "n_tokens", "dup_bigram_frac")
   }
 
-  /** TextRank keyword extraction (Mihalcea & Tarau 2004): per document,
-    * build the word co-occurrence graph (an undirected edge for every
-    * token pair within `window` positions), run `iterations` synchronous
-    * PageRank rounds over it, and emit each document's top-`k` words by
-    * final rank — the classic unsupervised keyword/keyphrase primitive.
-    *
-    * Relational shape — ONE graph computation for the whole corpus, not
-    * a per-document loop: nodes are `(doc_id, word)` composite keys, so
-    * every per-doc graph iterates together in the same
-    * join-per-round/partial-agg discipline as [[Graph.pageRank]]
-    * (DECIMAL(28,12) contribution addends, per-round round-`roundTo`,
-    * lineage truncated every 3 rounds). Symmetrized edges mean no
-    * dangling nodes by construction. The top-k is a per-doc
-    * row_number window — bounded by vocabulary per document, never a
-    * global sort. Lockstep-deterministic: the oracle unrolls the same
-    * rounds as CTEs and agrees byte-for-byte. Documents with < 2 tokens
-    * have no co-occurrence edges and emit nothing. */
   /** Map-only TextRank co-occurrence pair generation: for each position
     * i the partners are the next `window` tokens — slice + transform
     * emit exactly the (b.i − a.i) ∈ [1, window], u ≠ v pairs without
@@ -2238,6 +2218,23 @@ object TextAnalysis {
       .select(col("doc_id"), col("p.u").as("u"), col("p.v").as("v"))
       .filter(col("u") =!= col("v"))
 
+  /** TextRank keyword extraction (Mihalcea & Tarau 2004): per document,
+    * build the word co-occurrence graph (an undirected edge for every
+    * token pair within `window` positions), run `iterations` synchronous
+    * PageRank rounds over it, and emit each document's top-`k` words by
+    * final rank — the classic unsupervised keyword/keyphrase primitive.
+    *
+    * Relational shape — ONE graph computation for the whole corpus, not
+    * a per-document loop: nodes are `(doc_id, word)` composite keys, so
+    * every per-doc graph iterates together in the same
+    * join-per-round/partial-agg discipline as [[Graph.pageRank]]
+    * (DECIMAL(28,12) contribution addends, per-round round-`roundTo`,
+    * lineage truncated every 3 rounds). Symmetrized edges mean no
+    * dangling nodes by construction. The top-k is a per-doc
+    * row_number window — bounded by vocabulary per document, never a
+    * global sort. Lockstep-deterministic: the oracle unrolls the same
+    * rounds as CTEs and agrees byte-for-byte. Documents with < 2 tokens
+    * have no co-occurrence edges and emit nothing. */
   def textRankKeywords(df: DataFrame, idCol: String, textCol: String,
       k: Int = 3, window: Int = 2, iterations: Int = 6,
       damping: Double = 0.85, roundTo: Int = 9): DataFrame = {
@@ -2252,16 +2249,15 @@ object TextAnalysis {
     val withDeg = e.join(deg, Seq("doc_id", "u")).localCheckpoint(true)
     val nodes = e.select(col("doc_id"), col("u").as("node"))
       .distinct().localCheckpoint(true)
-    var ranks = nodes.withColumn("r", lit(1.0))
-    var lastCkpt: Option[DataFrame] = None
-    var i = 0
-    while (i < iterations) {
+    // lineage truncated every 3 rounds; the stats-flat leaf keeps the
+    // carried size estimate from compounding (see PlanBridge)
+    val result = Iterate.chain(nodes.withColumn("r", lit(1.0)), iterations, 3) { (ranks, _) =>
       // The graph is SYMMETRIZED (e carries both directions), so every
       // node in `nodes` has at least one INCOMING edge and the contrib
       // aggregate covers every node — re-joining `nodes` per round to
       // backfill dangling nodes (the directed-PageRank shape) would be
       // a provably-never-firing left_outer costing one shuffle a round.
-      var next = withDeg.join(ranks,
+      withDeg.join(ranks,
           withDeg("doc_id") === ranks("doc_id") && col("u") === col("node"))
         .groupBy(withDeg("doc_id").as("doc_id"), col("v").as("node"))
         .agg(sum((col("r") / col("deg").cast("double"))
@@ -2269,28 +2265,15 @@ object TextAnalysis {
         .select(col("doc_id"), col("node"),
           round(lit(1.0 - damping) + lit(damping) *
             col("csum").cast("double"), roundTo).as("r"))
-      i += 1
-      if (i % 3 == 0 && i < iterations) {
-        val ck = next.localCheckpoint(true)
-        lastCkpt.foreach(_.unpersist())
-        lastCkpt = Some(ck)
-        // stats-flat leaf: the carried size estimate must not compound
-        // across rounds (see Graph.flat / PlanBridge)
-        next = org.apache.spark.sql.graft.PlanBridge.statsFlatLeaf(ck)
-      }
-      ranks = next
+    }.finish { ranks =>
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("doc_id")).orderBy(col("r").desc, col("node"))
+      ranks.withColumn("rank", row_number().over(w))
+        .filter(col("rank") <= k)
+        .select(col("doc_id"), col("rank"), col("node").as("word"),
+          col("r").as("score"))
     }
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("doc_id")).orderBy(col("r").desc, col("node"))
-    val result = ranks.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("doc_id"), col("rank"), col("node").as("word"),
-        col("r").as("score"))
-      .localCheckpoint(true)
-    lastCkpt.foreach(_.unpersist())
-    e.unpersist()
-    withDeg.unpersist()
-    nodes.unpersist()
+    Iterate.release(e, withDeg, nodes)
     result
   }
 

@@ -6132,12 +6132,11 @@ object Queries {
           .connectedComponents(batch1, "src", "dst")
         val updated = graft.operators.Graph
           .updateConnectedComponents(labels1, batch2, "src", "dst")
-        // both CC runs have materialized eagerly by here — free the
-        // shared-edge checkpoint NOW instead of leaning on driver GC
-        // (round-16, advisor item: the only query-level checkpoint that
-        // lingered across a long bench session)
-        edges.unpersist()
-        labels1.unpersist()
+        // both CC runs have materialized eagerly by here and `updated`
+        // reads only its own final checkpoint — release the shared-edge
+        // checkpoint and the cold run's labels NOW instead of leaning on
+        // driver GC
+        graft.operators.Iterate.release(edges, labels1)
         updated.orderBy($"node")
       },
       Some("""WITH RECURSIVE

@@ -164,4 +164,10 @@ class ClassifierSpec extends AnyFunSuite with BeforeAndAfterAll {
       .agg(sum(col("n_docs"))).collect().head.getLong(0)
     assert(conf === 3L, "confusion matrix counts must cover every eval doc")
   }
+
+  test("trainTextClassifier releases every block except the ones its result holds") {
+    ReleaseCheck.check(spark.sparkContext, "trainTextClassifier")(
+      Classifier.trainTextClassifier(corpus, "doc_id", "text", "y",
+        nBuckets = 16, rounds = 3))
+  }
 }

@@ -665,4 +665,14 @@ class DedupSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the unrelated doc shares no band with anyone
     assert(!out.keys.exists { case (a, b) => a == 4L || b == 4L })
   }
+
+  test("duplicateClusters releases every block except the ones its result holds") {
+    val sc = spark.sparkContext
+    // a chain needs several rounds, so each round's checkpoint is superseded
+    val chain = spark.createDataFrame((1L until 12L).map(i => (i, i + 1)))
+      .toDF("id1", "id2")
+    ReleaseCheck.check(sc, "duplicateClusters")(Dedup.duplicateClusters(chain))
+    val empty = spark.createDataFrame(Seq.empty[(Long, Long)]).toDF("id1", "id2")
+    ReleaseCheck.check(sc, "duplicateClusters empty")(Dedup.duplicateClusters(empty))
+  }
 }

@@ -137,8 +137,8 @@ class GraphSpec extends AnyFunSuite with BeforeAndAfterAll {
     val conv = Graph.pageRank(k4, "src", "dst", iterations = 10,
       convergeTol = Some(0.0))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).sortBy(_._1)
-    assert(Graph.ConvergenceGauge.lastRounds === 1,
-      s"stationary graph should stop after round 1, ran ${Graph.ConvergenceGauge.lastRounds}")
+    assert(Iterate.ConvergenceGauge.lastRounds === 1,
+      s"stationary graph should stop after round 1, ran ${Iterate.ConvergenceGauge.lastRounds}")
     assert(conv.toSeq === fixed.toSeq)
   }
 
@@ -155,7 +155,7 @@ class GraphSpec extends AnyFunSuite with BeforeAndAfterAll {
     val conv = Graph.pageRank(star, "src", "dst", iterations = 10,
       damping = 0.3, roundTo = 3, convergeTol = Some(0.0))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).sortBy(_._1)
-    val rounds = Graph.ConvergenceGauge.lastRounds
+    val rounds = Iterate.ConvergenceGauge.lastRounds
     info(s"star converged in $rounds/10 rounds")
     assert(rounds < 10, s"expected early convergence, ran all $rounds rounds")
     assert(conv.toSeq === fixed.toSeq,
@@ -172,7 +172,7 @@ class GraphSpec extends AnyFunSuite with BeforeAndAfterAll {
     val conv = Graph.personalizedPageRank(k4, "src", "dst", Seq(0L),
       iterations = 12, damping = 0.3, roundTo = 3, convergeTol = Some(0.0))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).sortBy(_._1)
-    val rounds = Graph.ConvergenceGauge.lastRounds
+    val rounds = Iterate.ConvergenceGauge.lastRounds
     info(s"ppr converged in $rounds/12 rounds")
     assert(rounds < 12, s"expected early convergence, ran all $rounds rounds")
     assert(conv.toSeq === fixed.toSeq)
@@ -511,7 +511,7 @@ class GraphSpec extends AnyFunSuite with BeforeAndAfterAll {
     // far below the requested 50
     val early = Graph.kCore(edges, "src", "dst", k = 2, rounds = 50, stopEarly = true)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val executed = Graph.ConvergenceGauge.lastRounds
+    val executed = Iterate.ConvergenceGauge.lastRounds
     assert(executed === 4, s"expected 4 observed rounds, ran $executed")
     val fixed = Graph.kCore(edges, "src", "dst", k = 2, rounds = 50)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -520,8 +520,8 @@ class GraphSpec extends AnyFunSuite with BeforeAndAfterAll {
     // observed round; a fully-peeled (empty) result also terminates
     Graph.kCore(clique.toDF("src", "dst"), "src", "dst", k = 2,
       rounds = 50, stopEarly = true).collect()
-    assert(Graph.ConvergenceGauge.lastRounds === 1,
-      s"stationary graph should stop after round 1, ran ${Graph.ConvergenceGauge.lastRounds}")
+    assert(Iterate.ConvergenceGauge.lastRounds === 1,
+      s"stationary graph should stop after round 1, ran ${Iterate.ConvergenceGauge.lastRounds}")
     assert(Graph.kCore(edges, "src", "dst", k = 4, rounds = 50,
       stopEarly = true).count() === 0)
   }
@@ -584,7 +584,7 @@ class GraphSpec extends AnyFunSuite with BeforeAndAfterAll {
     val resumed = Graph.pageRank(k4, "src", "dst", iterations = 30,
         convergeTol = Some(0.0), initRanks = Some(stat))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(Graph.ConvergenceGauge.lastRounds === 1,
+    assert(Iterate.ConvergenceGauge.lastRounds === 1,
       "stationary warm start must stop after one round")
     assert(resumed === stat.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap)
     // appended nodes (absent from the seed) enter at 1.0; the enlarged
@@ -593,7 +593,7 @@ class GraphSpec extends AnyFunSuite with BeforeAndAfterAll {
     val appended = Graph.pageRank(extra, "src", "dst", iterations = 30,
         convergeTol = Some(0.0), initRanks = Some(stat))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(Graph.ConvergenceGauge.lastRounds === 1,
+    assert(Iterate.ConvergenceGauge.lastRounds === 1,
       "appended-but-stationary graph must also stop after one round")
     assert(appended(100L) === 1.0 && appended(101L) === 1.0)
   }
@@ -1231,12 +1231,6 @@ class GraphSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(shallow === Map(1L -> 0L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L))
   }
 
-  /** Persisted RDD ids the frame's plan reads (its checkpoint leaves). */
-  private def heldBy(df: org.apache.spark.sql.DataFrame): Set[Int] =
-    df.queryExecution.analyzed.collectLeaves().collect {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
-    }.toSet
-
   test("iterative operators release every block except the ones their result holds") {
     val sp = spark; import sp.implicits._
     // cycles (1-2-3, 4-5), a dangling sink (6), a clique (7..10) hanging
@@ -1251,15 +1245,8 @@ class GraphSpec extends AnyFunSuite with BeforeAndAfterAll {
       .toDF("src", "dst")
     val sources = Seq(1L, 7L).toDF("s")
     val sc = spark.sparkContext
-    def check(name: String)(call: => org.apache.spark.sql.DataFrame): Unit = {
-      val before = sc.getPersistentRDDs.keySet
-      val out = call
-      val grown = sc.getPersistentRDDs.keySet -- before
-      val held = heldBy(out)
-      assert(grown.subsetOf(held),
-        s"$name left ${(grown -- held).size} checkpoint(s) persisted")
-      Iterate.release(out)
-    }
+    def check(name: String)(call: => org.apache.spark.sql.DataFrame): Unit =
+      ReleaseCheck.check(sc, name)(call)
     for (tol <- Seq(None, Some(0.0))) {
       check(s"pageRank $tol")(Graph.pageRank(g, "src", "dst", iterations = 6,
         checkpointEvery = 2, convergeTol = tol))
@@ -1307,8 +1294,9 @@ class GraphSpec extends AnyFunSuite with BeforeAndAfterAll {
       propRounds = 9))
     check("dagLevels")(Graph.dagLevels(dag, "src", "dst", rounds = 5,
       checkpointEvery = 2))
-    // connectedComponents and minimumSpanningForest are left out: their
-    // rounds run in Dedup.duplicateClusters, which frees its checkpoints
-    // with Dataset.unpersist (a no-op on local checkpoints)
+    // their rounds run in Dedup.duplicateClusters
+    check("connectedComponents")(Graph.connectedComponents(g, "src", "dst"))
+    check("minimumSpanningForest")(Graph.minimumSpanningForest(g, "src",
+      "dst", "w", rounds = 3))
   }
 }

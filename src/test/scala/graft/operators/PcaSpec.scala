@@ -91,4 +91,10 @@ class PcaSpec extends AnyFunSuite with BeforeAndAfterAll {
       Pca.pcaPowerProject(empty, rounds = 1).collect()
     }
   }
+
+  test("power iteration releases every block except the ones its result holds") {
+    val sc = spark.sparkContext
+    ReleaseCheck.check(sc, "pcaPowerComponent")(Pca.pcaPowerComponent(planted, rounds = 3))
+    ReleaseCheck.check(sc, "pcaPowerProject")(Pca.pcaPowerProject(planted, rounds = 3))
+  }
 }

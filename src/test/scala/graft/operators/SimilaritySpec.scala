@@ -1194,4 +1194,16 @@ class SimilaritySpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(rows.length === 4 && rows.map(_._3).distinct.length === 4)
     }
   }
+
+  test("graph-ANN search releases every block except the ones its result holds") {
+    val sc = spark.sparkContext
+    val e = emb
+    val q = e.filter(col("vec_id") < 5)
+    val g = Similarity.nswGraph(e, m = 6)
+    for (rounds <- Seq(0, 1, 3))
+      ReleaseCheck.check(sc, s"nswKnn rounds=$rounds")(
+        Similarity.nswKnn(q, e, g, 3, beam = 4, rounds = rounds))
+    ReleaseCheck.check(sc, "hnswKnn")(Similarity.hnswKnn(q, e, 3, m = 6,
+      beam = 8, roundsPerLayer = 1, baseRounds = 3, levelBase = 4, maxLevel = 2))
+  }
 }

@@ -950,4 +950,34 @@ class TextPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       === Seq.empty)
     assert(TextAnalysis.viterbiPiecesKernel("", Nil) === Seq.empty)
   }
+
+  private def releaseDocs = {
+    val sp = spark; import sp.implicits._
+    Seq(
+      (1L, "pivot alpha pivot beta pivot gamma pivot delta"),
+      (2L, "banana bandana banana cabana the cat sat on the mat"),
+      (3L, "running runner run runs running")).toDF("doc_id", "text")
+  }
+
+  test("textRankKeywords releases every block except the ones its result holds") {
+    // 7 iterations: checkpoints after rounds 3 and 6, then the final one
+    ReleaseCheck.check(spark.sparkContext, "textRankKeywords")(
+      TextAnalysis.textRankKeywords(releaseDocs, "doc_id", "text", k = 2,
+        iterations = 7))
+  }
+
+  test("unigramLmVocab releases every block except the ones its result holds") {
+    val sc = spark.sparkContext
+    val docs = releaseDocs
+    for (em <- Seq(1, 3))
+      ReleaseCheck.check(sc, s"unigramLmVocab emRounds=$em")(
+        TextAnalysis.unigramLmVocab(docs, "text", vocabMulti = 8, emRounds = em))
+    val init = TextAnalysis.unigramLmVocab(docs, "text", vocabMulti = 8, emRounds = 1)
+    ReleaseCheck.check(sc, "unigramLmVocab initVocab")(
+      TextAnalysis.unigramLmVocab(docs, "text", vocabMulti = 8, emRounds = 1,
+        initVocab = Some(init)))
+    // the caller's initVocab frame is never released by the operator
+    assert(ReleaseCheck.heldBy(init).subsetOf(sc.getPersistentRDDs.keySet))
+    Iterate.release(init)
+  }
 }
