@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
@@ -15,6 +15,38 @@ import org.apache.spark.sql.types.DoubleType
   * All arithmetic is double-precision Column expressions folded in array
   * order, with cosine rounded to 6 decimals so results are reproducible
   * across engines (the DuckDB oracle mirrors the same math).
+  *
+  * ANN pipeline. Every quantized or cell-routed index is one composition
+  * `cells → code scan → candidate cut → exact rerank` (the FAISS
+  * index-factory shape, `IVFx,SQ8` / `IVFx,PQy`, over Jégou et al.'s
+  * product quantization), built from plain private stage functions so
+  * each decision lives in one place:
+  *
+  *   - cells: [[sampledCells]] (every `centEvery`-th id with a non-null
+  *     embedding, id-sorted), [[autoProbes]], [[nearestCell]] (argmax
+  *     cosine, ties to the first = lower id) and [[probeCells]] (the
+  *     `probes` best cells, `(cs desc, cid asc)`);
+  *   - code kernels: [[sq8Code]]/[[sq8Decode]], [[signBits]] with one
+  *     [[hammingScan]], and for PQ [[pqNearestCodes]] (round-6 L2, ties to
+  *     the lower code id), [[adcTables]]/[[adcScore]] and the Lloyd
+  *     trainer [[lloydBooks]] (unrounded squared L2 via [[lloydNearest]]);
+  *   - candidates and rerank: [[rerankBudget]]
+  *     (`max(k·candMult, ceil(f·N))`), [[topCandidates]] (the per-query
+  *     cut), [[exactRerank]] (exact cosine on the survivors) and
+  *     [[rankTopK]] (the final `rank <= k` window every path ends in).
+  *
+  * Compositions: [[sq8Knn]]/[[sq8KnnFromCodes]] = SQ8 scan → cut →
+  * rerank; [[binaryKnnFromSigs]] = Hamming scan → budget cut → rerank;
+  * [[cascadeKnn]] = Hamming cut → SQ8 cut → rerank; [[rpKnnFromProjections]]
+  * = projected scan → budget cut → rerank; [[pqKnnFromCodes]] = ADC scan →
+  * cut → rerank; [[ivfKnn]]/[[ivfKnnCodebook]] = cells → probed-cell
+  * exact scoring → [[rankTopK]]; [[ivfSq8KnnFromIndex]] = probed cells →
+  * SQ8 scan → cut → rerank; [[ivfPqKnn]]/[[ivfPqKnnTrained]] = cells → PQ
+  * encode + ADC → cut → rerank; [[ivfAdcKnnTrained]] = cells → residual
+  * PQ + ADC → cut → rerank. [[knn]], [[annKnn]], [[knnKernel]] and
+  * [[annKnnKernel]] score directly and end in [[rankTopK]]. The graph
+  * indexes ([[nswGraph]], [[hnswKnn]], [[writeHnswIndex]]) and
+  * [[semanticDedup]] share the cell stages only.
   */
 object Similarity {
 
@@ -83,13 +115,8 @@ object Similarity {
   def knn(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
     val q = broadcast(queries.select(col("vec_id").as("query_id"), col("embedding").as("qe")))
     val c = corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cs").desc, col("neighbor_id"))
-    q.join(c, col("query_id") =!= col("neighbor_id"))
-      .withColumn("cs", cosineF(col("qe"), col("ce")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cs"))
+    rankTopK(q.join(c, col("query_id") =!= col("neighbor_id"))
+      .withColumn("cs", cosineF(col("qe"), col("ce"))), k)
   }
 
   /** Exact MAX-INNER-PRODUCT top-k (MIPS — the recommendation-scoring
@@ -189,14 +216,9 @@ object Similarity {
           col("_graft_qb").bitwiseXOR(lit(m))): _*)).as("bucket")))
     val c = corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"),
       lshBucket(col("embedding"), planes, dims).as("bucket"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cs").desc, col("neighbor_id"))
-    q.join(c, Seq("bucket"))
+    rankTopK(q.join(c, Seq("bucket"))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cs", cosineF(col("qe"), col("ce")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cs"))
+      .withColumn("cs", cosineF(col("qe"), col("ce"))), k)
   }
 
   /** Scalar-quantization (SQ8) ANN: compress every corpus vector to one
@@ -244,25 +266,11 @@ object Similarity {
       bounds: (Array[Double], Array[Double])): DataFrame = {
     val sp = corpus.sparkSession
     import sp.implicits._
-    val (mn, span) = bounds
-    val bc = sp.sparkContext.broadcast((mn, span))
-    corpus.select(col(idCol).cast("long"), col(vecCol))
-      .filter(col(idCol).isNotNull && col(vecCol).isNotNull)
-      .as[(Long, Array[Float])]
+    val bc = sp.sparkContext.broadcast(bounds)
+    idVectors(corpus, idCol, vecCol)
       .mapPartitions { it =>
         val (m, s) = bc.value
-        it.map { case (id, v) =>
-          val n = math.min(v.length, m.length)
-          val codes = new Array[Byte](n)
-          var i = 0
-          while (i < n) {
-            val sSafe = if (s(i) == 0.0) 1.0 else s(i)
-            codes(i) = math.min(255.0, math.max(0.0,
-              math.floor((v(i).toDouble - m(i)) / sSafe * 256.0))).toInt.toByte
-            i += 1
-          }
-          (id, codes)
-        }
+        it.map { case (id, v) => (id, sq8Code(v, m, s)) }
       }.toDF("vec_id", "codes")
   }
 
@@ -291,36 +299,14 @@ object Similarity {
         val (m, s) = bb.value
         it.flatMap { case (nid, cd) =>
           // decode the midpoint once per corpus row, score every query
-          val rec = new Array[Double](cd.length)
-          var i = 0
-          while (i < cd.length) {
-            rec(i) =
-              if (s(i) == 0.0) m(i)
-              else m(i) + ((cd(i) & 0xFF).toDouble + 0.5) * s(i) / 256.0
-            i += 1
-          }
+          val rec = sq8Decode(cd, m, s)
           qs.iterator.filter(_._1 != nid).map { case (qid, qv) =>
             (qid, nid, cosineKernelFD(qv, rec))
           }
         }
       }.toDF("query_id", "neighbor_id", "acs")
-    val wApprox = Window.partitionBy(col("query_id"))
-      .orderBy(col("acs").desc, col("neighbor_id"))
-    val cands = approxScores
-      .withColumn("_crank", row_number().over(wApprox))
-      .filter(col("_crank") <= k * candMult) // survivors of the quantized scan
-      .select(col("query_id"), col("neighbor_id"))
-    // exact rerank: the float embeddings are read for the candidates only
-    val q = broadcast(queries.select(col("vec_id").as("query_id"),
-      col("embedding").as("qe")))
-    val c = corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"))
-    val wExact = Window.partitionBy(col("query_id"))
-      .orderBy(col("cs").desc, col("neighbor_id"))
-    cands.join(c, Seq("neighbor_id")).join(q, Seq("query_id"))
-      .withColumn("cs", cosineF(col("qe"), col("ce")))
-      .withColumn("rank", row_number().over(wExact))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cs"))
+    exactRerank(topCandidates(approxScores, k * candMult, "acs", ascending = false),
+      queries, corpus, k)
   }
 
   /** [[cosineKernel]] for a float query against an already-decoded
@@ -351,29 +337,18 @@ object Similarity {
   def binarySignatures(corpus: DataFrame, idCol: String, vecCol: String): DataFrame = {
     val sp = corpus.sparkSession
     import sp.implicits._
-    corpus.select(col(idCol).cast("long"), col(vecCol))
-      .filter(col(idCol).isNotNull && col(vecCol).isNotNull)
-      .as[(Long, Array[Float])]
-      .mapPartitions { it =>
-        it.map { case (id, v) =>
-          val words = new Array[Long](math.max(1, (v.length + 63) / 64))
-          var i = 0
-          while (i < v.length) {
-            if (v(i) > 0f) words(i >> 6) |= 1L << (i & 63)
-            i += 1
-          }
-          (id, words)
-        }
-      }.toDF("vec_id", "sig")
+    idVectors(corpus, idCol, vecCol)
+      .mapPartitions(_.map { case (id, v) => (id, signBits(v)) })
+      .toDF("vec_id", "sig")
   }
 
   /** Binary-quantization ANN over MATERIALIZED sign signatures (see
     * [[binarySignatures]]): the candidate scan reads `(vec_id, sig)`
     * ONLY — 8 bytes per 64 dims off storage — ranks every corpus row
     * against the broadcast queries by Hamming distance (XOR+popcount),
-    * keeps the top `k·candMult` per query by `(hamming asc, id asc)`,
-    * and touches the float embeddings just for those survivors (exact
-    * cosine rerank, round-6, id tiebreak). Everything is integer
+    * keeps the [[rerankBudget]] best per query by `(hamming asc, id
+    * asc)`, and touches the float embeddings just for those survivors
+    * ([[exactRerank]]). Everything is integer
     * arithmetic until the rerank, so candidate sets — and results — are
     * engine-portable bit-for-bit. */
   def binaryKnnFromSigs(queries: DataFrame, sigs: DataFrame, corpus: DataFrame,
@@ -381,65 +356,21 @@ object Similarity {
     require(k >= 1, "k must be positive")
     require(candMult >= 1, "candMult must be positive")
     require(candFraction >= 0.0 && candFraction <= 1.0, "candFraction in [0,1]")
-    val sp = corpus.sparkSession
-    import sp.implicits._
     // A 1-bit/dim sketch is COARSE (for 64-dim embeddings the whole
     // signature is 64 bits), so a fixed candidate count decays with
     // corpus growth: more rows crowd into each Hamming shell and the
     // true neighbors fall below the cut (measured recall@3 0.667 at
-    // sf0.01 → 0.367 at sf0.1 with a fixed 24). The budget therefore
-    // scales as max(k·candMult, ceil(candFraction·N)) — the auto-probe
-    // rule from [[ivfKnn]]: a constant FRACTION of the corpus reranks,
-    // so recall holds under growth by construction. The bandwidth story
-    // is unchanged (the full scan reads 1-bit codes; only the fraction
-    // reranks from float storage); the count() is one columnar job over
-    // the code column. The default fraction is 0.2 (round 15, up from
-    // 0.05): a 64-bit/64-dim signature is the coarsest code in the
-    // library, and the DuckDB-replayed budget sweep measured recall@3
-    // 0.667/0.667 at 5% → 0.933/0.867 at 20% (sf0.01/sf0.1) — the
-    // floats reranked stay a constant 1/5 of corpus bytes while the
-    // full scan still reads 1 bit/dim.
-    val nCorpus = sigs.count()
-    val budget = math.max(k.toLong * candMult,
-      math.ceil(candFraction * nCorpus).toLong)
-    val qCollected = binarySignatures(queries, "vec_id", "embedding")
-      .limit(MaxBroadcastQueries + 1)
-      .as[(Long, Array[Long])].collect()
-    require(qCollected.length <= MaxBroadcastQueries,
-      s"ANN query set exceeds MaxBroadcastQueries=$MaxBroadcastQueries vectors; " +
-        "use the distributed join paths for corpus-sized query sets")
-    val qb = sp.sparkContext.broadcast(qCollected)
-    val hams = sigs.select(col("vec_id").cast("long"), col("sig"))
-      .as[(Long, Array[Long])]
-      .mapPartitions { it =>
-        val qs = qb.value
-        it.flatMap { case (nid, sg) =>
-          qs.iterator.filter(_._1 != nid).map { case (qid, qs0) =>
-            val n = math.min(sg.length, qs0.length)
-            var h = 0; var w = 0
-            while (w < n) {
-              h += java.lang.Long.bitCount(sg(w) ^ qs0(w)); w += 1
-            }
-            (qid, nid, h)
-          }
-        }
-      }.toDF("query_id", "neighbor_id", "ham")
-    val wApprox = Window.partitionBy(col("query_id"))
-      .orderBy(col("ham"), col("neighbor_id"))
-    val cands = hams
-      .withColumn("_crank", row_number().over(wApprox))
-      .filter(col("_crank") <= budget)
-      .select(col("query_id"), col("neighbor_id"))
-    val q = broadcast(queries.select(col("vec_id").as("query_id"),
-      col("embedding").as("qe")))
-    val c = corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"))
-    val wExact = Window.partitionBy(col("query_id"))
-      .orderBy(col("cs").desc, col("neighbor_id"))
-    cands.join(c, Seq("neighbor_id")).join(q, Seq("query_id"))
-      .withColumn("cs", cosineF(col("qe"), col("ce")))
-      .withColumn("rank", row_number().over(wExact))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cs"))
+    // sf0.01 → 0.367 at sf0.1 with a fixed 24), hence the
+    // [[rerankBudget]] corpus fraction. The default fraction is 0.2
+    // (round 15, up from 0.05): a 64-bit/64-dim signature is the
+    // coarsest code in the library, and the DuckDB-replayed budget
+    // sweep measured recall@3 0.667/0.667 at 5% → 0.933/0.867 at 20%
+    // (sf0.01/sf0.1) — the floats reranked stay a constant 1/5 of
+    // corpus bytes while the full scan still reads 1 bit/dim.
+    val budget = rerankBudget(k, candMult, candFraction, sigs.count())
+    val hams = hammingScan(sigs, collectQueryVectors(queries))
+    exactRerank(topCandidates(hams, budget, "ham", ascending = true),
+      queries, corpus, k)
   }
 
   /** Binary-quantization ANN with signatures computed inline from the
@@ -481,41 +412,17 @@ object Similarity {
     // (jaccardPairs/pageRank discipline) instead of re-signing the
     // billion-row corpus per consumer.
     val sigs = binarySignatures(corpus, "vec_id", "embedding").localCheckpoint(true)
-    val nCorpus = sigs.count()
-    val budget1 = math.max(k.toLong * c1Mult,
-      math.ceil(candFraction * nCorpus).toLong)
-    val qSigs = binarySignatures(queries, "vec_id", "embedding")
-      .limit(MaxBroadcastQueries + 1)
-      .as[(Long, Array[Long])].collect()
-    require(qSigs.length <= MaxBroadcastQueries,
-      s"ANN query set exceeds MaxBroadcastQueries=$MaxBroadcastQueries vectors; " +
-        "use the distributed join paths for corpus-sized query sets")
-    val qsb = sp.sparkContext.broadcast(qSigs)
-    val hams = sigs.select(col("vec_id").cast("long"), col("sig"))
-      .as[(Long, Array[Long])]
-      .mapPartitions { it =>
-        val qs = qsb.value
-        it.flatMap { case (nid, sg) =>
-          qs.iterator.filter(_._1 != nid).map { case (qid, q0) =>
-            val n = math.min(sg.length, q0.length)
-            var h = 0; var w = 0
-            while (w < n) { h += java.lang.Long.bitCount(sg(w) ^ q0(w)); w += 1 }
-            (qid, nid, h)
-          }
-        }
-      }.toDF("query_id", "neighbor_id", "ham")
-    val w1 = Window.partitionBy(col("query_id"))
-      .orderBy(col("ham"), col("neighbor_id"))
-    val cands1 = hams.withColumn("_r1", row_number().over(w1))
-      .filter(col("_r1") <= budget1)
-      .select(col("query_id"), col("neighbor_id"))
+    val budget1 = rerankBudget(k, c1Mult, candFraction, sigs.count())
+    val qCollected = collectQueryVectors(queries)
+    val cands1 = topCandidates(hammingScan(sigs, qCollected), budget1, "ham",
+      ascending = true)
     // stage 2 — SQ8 asymmetric rescore of the stage-1 survivors. Codes
     // are materialized once too: the rescore join is the only consumer,
     // but without a checkpoint a retried/AQE-replanned stage would
     // re-encode the whole corpus.
     val bounds = sq8Bounds(corpus, "embedding")
     val codes = sq8Encode(corpus, "vec_id", "embedding", bounds).localCheckpoint(true)
-    val qfb = sp.sparkContext.broadcast(collectQueryVectors(queries).toMap)
+    val qfb = sp.sparkContext.broadcast(qCollected.toMap)
     val bb = sp.sparkContext.broadcast(bounds)
     val approx = cands1
       .join(codes.withColumnRenamed("vec_id", "neighbor_id"), Seq("neighbor_id"))
@@ -525,33 +432,13 @@ object Similarity {
         val qm = qfb.value
         val (m, s) = bb.value
         it.map { case (qid, nid, cd) =>
-          val rec = new Array[Double](cd.length)
-          var i = 0
-          while (i < cd.length) {
-            rec(i) =
-              if (s(i) == 0.0) m(i)
-              else m(i) + ((cd(i) & 0xFF).toDouble + 0.5) * s(i) / 256.0
-            i += 1
-          }
-          (qid, nid, cosineKernelFD(qm(qid), rec))
+          (qid, nid, cosineKernelFD(qm(qid), sq8Decode(cd, m, s)))
         }
       }.toDF("query_id", "neighbor_id", "acs")
-    val w2 = Window.partitionBy(col("query_id"))
-      .orderBy(col("acs").desc, col("neighbor_id"))
-    val cands2 = approx.withColumn("_r2", row_number().over(w2))
-      .filter(col("_r2") <= k * c2Mult)
-      .select(col("query_id"), col("neighbor_id"))
     // stage 3 — exact rerank, floats read for the finalists only
-    val q = broadcast(queries.select(col("vec_id").as("query_id"),
-      col("embedding").as("qe")))
-    val c = corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"))
-    val wE = Window.partitionBy(col("query_id"))
-      .orderBy(col("cs").desc, col("neighbor_id"))
-    val result = cands2.join(c, Seq("neighbor_id")).join(q, Seq("query_id"))
-      .withColumn("cs", cosineF(col("qe"), col("ce")))
-      .withColumn("rank", row_number().over(wE))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cs"))
+    val result = exactRerank(
+        topCandidates(approx, k * c2Mult, "acs", ascending = false),
+        queries, corpus, k)
       .localCheckpoint(true) // materialize (k rows/query) before freeing the stages
     Iterate.release(sigs, codes)
     result
@@ -582,6 +469,278 @@ object Similarity {
         coalesce(col("_graft_hits"), lit(0L)).as("hits"),
         round(coalesce(col("_graft_hits"), lit(0L)).cast("double") /
           col("_graft_n").cast("double"), 6).as("recall"))
+  }
+
+  // ------------------------------------------------------------------
+  // ANN pipeline stages (see the object scaladoc for which index composes
+  // which). Plain functions over plain arrays: the task closures that call
+  // them capture nothing but their broadcasts.
+  // ------------------------------------------------------------------
+
+  /** `(id, vector)` rows with a non-null id and vector — the input every
+    * kernel scan reads. */
+  private def idVectors(df: DataFrame, idCol: String = "vec_id",
+      vecCol: String = "embedding"): Dataset[(Long, Array[Float])] = {
+    val sp = df.sparkSession
+    import sp.implicits._
+    df.select(col(idCol).cast("long"), col(vecCol))
+      .filter(col(idCol).isNotNull && col(vecCol).isNotNull)
+      .as[(Long, Array[Float])]
+  }
+
+  /** The sampled cell table: every `centEvery`-th id with a non-null
+    * embedding, the `maxCents` lowest, sorted by id. The sample grows with
+    * the corpus; `maxCents` keeps it a codebook. */
+  private def sampledCells(corpus: DataFrame, idCol: String, vecCol: String,
+      centEvery: Int, maxCents: Int): Array[(Long, Array[Float])] = {
+    val sp = corpus.sparkSession
+    import sp.implicits._
+    val cents = corpus.filter(col(idCol) % centEvery === 0)
+      .select(col(idCol).cast("long"), col(vecCol))
+      .filter(col(idCol).isNotNull && col(vecCol).isNotNull)
+      .orderBy(col(idCol)).limit(maxCents)
+      .as[(Long, Array[Float])].collect().sortBy(_._1)
+    require(cents.nonEmpty,
+      s"no centroids: no corpus $idCol divisible by $centEvery — lower centEvery")
+    cents
+  }
+
+  /** `probes`, or when 0 the auto rule `max(4, ceil(0.4 · nCells))`: a
+    * constant probed fraction of a cell table that grows with the corpus
+    * (see [[IvfAutoProbeFraction]]). */
+  private def autoProbes(probes: Int, nCells: Int): Int =
+    if (probes > 0) probes
+    else math.max(4, math.ceil(IvfAutoProbeFraction * nCells).toInt)
+
+  /** Index of `v`'s argmax round-6 cosine cell; ties go to the first, which
+    * is the lower id in an id-sorted table. */
+  private def nearestCell(v: Array[Float], cells: Array[(Long, Array[Float])]): Int = {
+    var best = 0; var bestCs = Double.NegativeInfinity; var c = 0
+    while (c < cells.length) {
+      val s = cosineKernel(v, cells(c)._2)
+      if (s > bestCs) { bestCs = s; best = c }
+      c += 1
+    }
+    best
+  }
+
+  /** The `probes` cells nearest `qv`, ordered `(cs desc, cid asc)`. */
+  private def probeCells(qv: Array[Float], cells: Array[(Long, Array[Float])],
+      probes: Int): Array[Long] =
+    cells.map { case (cid, ce) => (cid, cosineKernel(qv, ce)) }
+      .sortBy { case (cid, cs) => (-cs, cid) }.take(probes).map(_._1)
+
+  /** SQ8 code: `clamp(floor((x_i - mn_i) / span_i * 256), 0, 255)` per dim. */
+  private def sq8Code(v: Array[Float], mn: Array[Double], span: Array[Double]): Array[Byte] = {
+    val codes = new Array[Byte](math.min(v.length, mn.length))
+    var i = 0
+    while (i < codes.length) {
+      val sSafe = if (span(i) == 0.0) 1.0 else span(i)
+      codes(i) = math.min(255.0, math.max(0.0,
+        math.floor((v(i).toDouble - mn(i)) / sSafe * 256.0))).toInt.toByte
+      i += 1
+    }
+    codes
+  }
+
+  /** SQ8 reconstruction at the cell midpoint (a zero-span dim decodes to
+    * its min). */
+  private def sq8Decode(cd: Array[Byte], mn: Array[Double], span: Array[Double]): Array[Double] = {
+    val rec = new Array[Double](cd.length)
+    var i = 0
+    while (i < cd.length) {
+      rec(i) =
+        if (span(i) == 0.0) mn(i)
+        else mn(i) + ((cd(i) & 0xFF).toDouble + 0.5) * span(i) / 256.0
+      i += 1
+    }
+    rec
+  }
+
+  /** Sign signature: bit `i` of word `i/64` is set iff `v(i) > 0`. */
+  private def signBits(v: Array[Float]): Array[Long] = {
+    val words = new Array[Long](math.max(1, (v.length + 63) / 64))
+    var i = 0
+    while (i < v.length) {
+      if (v(i) > 0f) words(i >> 6) |= 1L << (i & 63)
+      i += 1
+    }
+    words
+  }
+
+  /** Hamming distance of every `(vec_id, sig)` row to every query's sign
+    * signature (self excluded): `(query_id, neighbor_id, ham)`. */
+  private def hammingScan(sigs: DataFrame,
+      queries: Array[(Long, Array[Float])]): DataFrame = {
+    val sp = sigs.sparkSession
+    import sp.implicits._
+    val qb = sp.sparkContext.broadcast(queries.map { case (id, v) => (id, signBits(v)) })
+    sigs.select(col("vec_id").cast("long"), col("sig"))
+      .as[(Long, Array[Long])]
+      .mapPartitions { it =>
+        val qs = qb.value
+        it.flatMap { case (nid, sg) =>
+          qs.iterator.filter(_._1 != nid).map { case (qid, q0) =>
+            val n = math.min(sg.length, q0.length)
+            var h = 0; var w = 0
+            while (w < n) { h += java.lang.Long.bitCount(sg(w) ^ q0(w)); w += 1 }
+            (qid, nid, h)
+          }
+        }
+      }.toDF("query_id", "neighbor_id", "ham")
+  }
+
+  /** Round-6 L2 between the subvector of `v` at `off` and entry `c` — the
+    * per-subspace PQ distance. */
+  private def subDist(v: Array[Double], off: Int, c: Array[Double]): Double = {
+    var s = 0.0; var i = 0
+    while (i < c.length) {
+      val dd = v(off + i) - c(i)
+      s += dd * dd; i += 1
+    }
+    round6(math.sqrt(s))
+  }
+
+  /** PQ encoding: per subspace, the id of the entry nearest on round-6 L2,
+    * ties to the lower id. */
+  private def pqNearestCodes(v: Array[Double],
+      books: Array[Array[(Long, Array[Double])]]): Array[Long] = {
+    val sd = books(0)(0)._2.length
+    val codes = new Array[Long](books.length)
+    var j = 0
+    while (j < books.length) {
+      val bk = books(j)
+      var best = 0L; var bestD = Double.PositiveInfinity; var e = 0
+      while (e < bk.length) {
+        val dd = subDist(v, j * sd, bk(e)._2)
+        if (dd < bestD || (dd == bestD && bk(e)._1 < best)) { bestD = dd; best = bk(e)._1 }
+        e += 1
+      }
+      codes(j) = best
+      j += 1
+    }
+    codes
+  }
+
+  /** ADC lookup tables for one (normalized) query: per subspace, code id →
+    * round-6 L2 to that entry in exact micro-units. */
+  private def adcTables(qv: Array[Double],
+      books: Array[Array[(Long, Array[Double])]]): Array[Map[Long, Long]] = {
+    val sd = books(0)(0)._2.length
+    books.zipWithIndex.map { case (bk, j) =>
+      bk.map { case (cid, cv) => cid -> math.round(subDist(qv, j * sd, cv) * 1e6) }.toMap
+    }
+  }
+
+  /** Asymmetric distance of a code vector: the exact sum of its table
+    * entries, so ordering is engine- and partition-independent. */
+  private def adcScore(tables: Array[Map[Long, Long]], codes: Array[Long]): Long = {
+    var s = 0L; var j = 0
+    while (j < codes.length) { s += tables(j)(codes(j)); j += 1 }
+    s
+  }
+
+  /** Lloyd assignment: index of the entry nearest the subvector of `v` at
+    * `off` on UNROUNDED squared L2, ties to the first. */
+  private def lloydNearest(v: Array[Double], off: Int, bk: Array[Array[Double]]): Int = {
+    var best = 0; var bestD = Double.PositiveInfinity; var e = 0
+    while (e < bk.length) {
+      val c = bk(e)
+      var s = 0.0; var i = 0
+      while (i < c.length) { val dd = v(off + i) - c(i); s += dd * dd; i += 1 }
+      if (s < bestD) { bestD = s; best = e }
+      e += 1
+    }
+    best
+  }
+
+  /** Lloyd-trained per-subspace books over `prep(vector)`: seeded with the
+    * `kCodes` lowest-id vectors, then `iters` passes that assign every
+    * subvector ([[lloydNearest]]) and recompute means as (subspace, code,
+    * dim) DECIMAL sums — one aggregation per pass for all `m` subspaces,
+    * independent of partition merge order. Empty entries keep their
+    * value. Entry ids are their indices. */
+  private def lloydBooks(vecs: Dataset[(Long, Array[Float])], idCol: String,
+      m: Int, kCodes: Int, iters: Int,
+      prep: Array[Float] => Array[Double]): Array[Array[(Long, Array[Double])]] = {
+    val sp = vecs.sparkSession
+    import sp.implicits._
+    val seed = vecs.orderBy(col(idCol)).limit(kCodes).collect().map(r => prep(r._2))
+    require(seed.nonEmpty, "empty corpus")
+    val dims = seed.head.length
+    require(dims % m == 0, s"dims=$dims not divisible by m=$m")
+    val sd = dims / m
+    var books: Array[Array[Array[Double]]] = Array.tabulate(m) { j =>
+      seed.map(v => java.util.Arrays.copyOfRange(v, j * sd, (j + 1) * sd))
+    }
+    for (_ <- 0 until iters) {
+      val bb = sp.sparkContext.broadcast(books)
+      val sums = vecs.mapPartitions { it =>
+        val bks = bb.value
+        it.flatMap { case (_, raw) =>
+          val v = prep(raw)
+          (0 until bks.length).iterator.flatMap { j =>
+            val best = lloydNearest(v, j * sd, bks(j))
+            (0 until sd).iterator.map(i => (j, best, i, v(j * sd + i)))
+          }
+        }
+      }.toDF("j", "code", "dim", "x")
+        .groupBy(col("j"), col("code"), col("dim"))
+        .agg(sum(col("x").cast(org.apache.spark.sql.types.DecimalType(28, 12))).as("s"),
+          count(lit(1)).as("n"))
+        .collect()
+      val next = books.map(_.map(_.clone()))
+      sums.foreach { r =>
+        next(r.getInt(0))(r.getInt(1))(r.getInt(2)) =
+          r.getDecimal(3).doubleValue() / r.getLong(4)
+      }
+      bb.destroy()
+      books = next
+    }
+    books.map(_.zipWithIndex.map { case (cv, e) => (e.toLong, cv) })
+  }
+
+  /** `max(k·candMult, ceil(candFraction·rows))`: a constant corpus
+    * FRACTION reranks, so recall holds under corpus growth by
+    * construction. `rows` (a count job) is evaluated only when
+    * `candFraction > 0`. */
+  private def rerankBudget(k: Int, candMult: Int, candFraction: Double,
+      rows: => Long): Long =
+    if (candFraction > 0.0)
+      math.max(k.toLong * candMult, math.ceil(candFraction * rows).toLong)
+    else k.toLong * candMult
+
+  /** The per-query candidate cut: the `budget` best `(query_id,
+    * neighbor_id)` pairs by `scoreCol`, neighbor id breaking ties. */
+  private def topCandidates(scores: DataFrame, budget: Long, scoreCol: String,
+      ascending: Boolean): DataFrame = {
+    val w = Window.partitionBy(col("query_id")).orderBy(
+      if (ascending) col(scoreCol).asc else col(scoreCol).desc, col("neighbor_id"))
+    scores.withColumn("_crank", row_number().over(w))
+      .filter(col("_crank") <= budget)
+      .select(col("query_id"), col("neighbor_id"))
+  }
+
+  /** Exact rerank of candidate pairs: only the survivors' float
+    * embeddings are read (equi-joins on id; queries broadcast), scored
+    * with [[cosineF]] and ranked by [[rankTopK]]. */
+  private def exactRerank(cands: DataFrame, queries: DataFrame,
+      corpus: DataFrame, k: Int): DataFrame = {
+    val q = broadcast(queries.select(col("vec_id").as("query_id"),
+      col("embedding").as("qe")))
+    val c = corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"))
+    rankTopK(cands.join(c, Seq("neighbor_id")).join(q, Seq("query_id"))
+      .withColumn("cs", cosineF(col("qe"), col("ce"))), k)
+  }
+
+  /** The kNN output: per query the `k` best `cs`, neighbor id breaking
+    * ties, as `(query_id, rank, neighbor_id, cs)`. */
+  private def rankTopK(scored: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("cs").desc, col("neighbor_id"))
+    scored.withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cs"))
   }
 
   // ------------------------------------------------------------------
@@ -660,9 +819,8 @@ object Similarity {
     * outDims = 32 over 64-d vectors the projected scoring does 2× less
     * arithmetic than brute force, and a PERSISTED projected column
     * (the natural deployment, like [[sq8Encode]]'s codes) reads 2×
-    * fewer bytes too. The rerank budget is max(k·candMult,
-    * ceil(candFraction·N)) — a constant corpus FRACTION, so recall
-    * holds under corpus growth by construction (the binaryKnn lesson).
+    * fewer bytes too. The rerank budget is [[rerankBudget]]'s corpus
+    * fraction (the binaryKnn lesson).
     *
     * Recall caveat: the synthetic test embeddings are near-isotropic
     * noise — every pairwise cosine concentrates near 0 and top-k
@@ -688,9 +846,7 @@ object Similarity {
     val sp = corpus.sparkSession
     import sp.implicits._
     val sgb = sp.sparkContext.broadcast(signMatrix(outDims, dims))
-    corpus.select(col("vec_id").cast("long"), col("embedding"))
-      .filter(col("vec_id").isNotNull && col("embedding").isNotNull)
-      .as[(Long, Array[Float])]
+    idVectors(corpus)
       .mapPartitions { it =>
         val sg = sgb.value
         it.map { case (id, v) => (id, projectJl(v, sg)) }
@@ -713,10 +869,8 @@ object Similarity {
   /** [[rpKnn]] over a MATERIALIZED projection table: the candidate
     * scan never touches the float embeddings — it scores broadcast
     * projected queries against `(vec_id, proj)` rows and only the
-    * surviving candidates read exact vectors (an equi-join on ids).
-    * Budget = max(k·candMult, ceil(candFraction·|projections|)) — a
-    * constant corpus FRACTION, so recall holds under corpus growth by
-    * construction (the binaryKnn lesson). */
+    * surviving candidates read exact vectors ([[exactRerank]] of the
+    * [[rerankBudget]] best). */
   def rpKnnFromProjections(queries: DataFrame, projections: DataFrame,
       corpus: DataFrame, k: Int, outDims: Int = 32, dims: Int = 64,
       candMult: Int = 4, candFraction: Double = 0.25): DataFrame = {
@@ -731,9 +885,7 @@ object Similarity {
     val qb = sp.sparkContext.broadcast(qProj)
     val proj = projections.select(col("vec_id").cast("long"), col("proj"))
       .as[(Long, Array[Double])]
-    val nCorpus = proj.count()
-    val budget = math.max(k.toLong * candMult,
-      math.ceil(candFraction * nCorpus).toLong)
+    val budget = rerankBudget(k, candMult, candFraction, proj.count())
     val approx = proj
       .mapPartitions { it =>
         val qs = qb.value
@@ -743,21 +895,8 @@ object Similarity {
           }
         }
       }.toDF("query_id", "neighbor_id", "acs")
-    val wA = Window.partitionBy(col("query_id"))
-      .orderBy(col("acs").desc, col("neighbor_id"))
-    val cands = approx.withColumn("_crank", row_number().over(wA))
-      .filter(col("_crank") <= budget)
-      .select(col("query_id"), col("neighbor_id"))
-    val q = broadcast(queries.select(col("vec_id").as("query_id"),
-      col("embedding").as("qe")))
-    val c = corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"))
-    val wE = Window.partitionBy(col("query_id"))
-      .orderBy(col("cs").desc, col("neighbor_id"))
-    cands.join(c, Seq("neighbor_id")).join(q, Seq("query_id"))
-      .withColumn("cs", cosineF(col("qe"), col("ce")))
-      .withColumn("rank", row_number().over(wE))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cs"))
+    exactRerank(topCandidates(approx, budget, "acs", ascending = false),
+      queries, corpus, k)
   }
 
   /** All pairs (id1 < id2) with cosine >= tau, as one fully distributed
@@ -913,9 +1052,7 @@ object Similarity {
     val sp = corpus.sparkSession
     import sp.implicits._
     val qb = sp.sparkContext.broadcast(collectQueryVectors(queries))
-    val pairs = corpus.select(col("vec_id").cast("long"), col("embedding"))
-      .filter(col("vec_id").isNotNull && col("embedding").isNotNull)
-      .as[(Long, Array[Float])]
+    rankTopK(idVectors(corpus)
       .mapPartitions { it =>
         val qs = qb.value
         it.flatMap { case (nid, v) =>
@@ -923,10 +1060,7 @@ object Similarity {
             (qid, nid, cosineKernel(qv, v))
           }
         }
-      }.toDF("query_id", "neighbor_id", "cs")
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cs").desc, col("neighbor_id"))
-    pairs.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cs"))
+      }.toDF("query_id", "neighbor_id", "cs"), k)
   }
 
   /** Maximal-Marginal-Relevance re-ranking (Carbonell & Goldstein 1998):
@@ -1101,17 +1235,8 @@ object Similarity {
     * keeps the codebook a codebook. */
   def ivfKnn(queries: DataFrame, corpus: DataFrame, k: Int,
       probes: Int = 0, centEvery: Int = 50, maxCents: Int = 65536): DataFrame = {
-    val sp = corpus.sparkSession
-    import sp.implicits._
-    val cents = corpus.filter(col("vec_id") % centEvery === 0)
-      .select(col("vec_id").cast("long"), col("embedding"))
-      .orderBy(col("vec_id")).limit(maxCents)
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
-    require(cents.nonEmpty,
-      s"no centroids: no corpus vec_id divisible by $centEvery — lower centEvery")
-    val p = if (probes > 0) probes
-      else math.max(4, math.ceil(IvfAutoProbeFraction * cents.length).toInt)
-    ivfProbeRerank(queries, corpus, k, p, cents)
+    val cents = sampledCells(corpus, "vec_id", "embedding", centEvery, maxCents)
+    ivfProbeRerank(queries, corpus, k, autoProbes(probes, cents.length), cents)
   }
 
   /** IVF with a trained codebook (see [[kmeansCodebook]]) — cell ids are
@@ -1144,30 +1269,18 @@ object Similarity {
     val sp = corpus.sparkSession
     import sp.implicits._
     val cb = sp.sparkContext.broadcast(cents)
-
-    def nearest(v: Array[Float], n: Int): Seq[Long] =
-      cb.value.map { case (cid, ce) => (cid, cosineKernel(v, ce)) }
-        .sortBy { case (cid, cs) => (-cs, cid) }.take(n).map(_._1).toSeq
-
-    val corpusCells = corpus.select(col("vec_id").cast("long"), col("embedding"))
-      .filter(col("vec_id").isNotNull && col("embedding").isNotNull)
-      .as[(Long, Array[Float])]
-      .mapPartitions(_.map { case (id, v) => (id, v, nearest(v, 1).head) })
-      .toDF("neighbor_id", "ce", "cid")
-    val queryCells = queries.select(col("vec_id").cast("long"), col("embedding"))
-      .filter(col("vec_id").isNotNull && col("embedding").isNotNull)
-      .as[(Long, Array[Float])]
+    val corpusCells = idVectors(corpus)
+      .mapPartitions { it =>
+        val cs = cb.value
+        it.map { case (id, v) => (id, v, cs(nearestCell(v, cs))._1) }
+      }.toDF("neighbor_id", "ce", "cid")
+    val queryCells = idVectors(queries)
       .mapPartitions(_.flatMap { case (id, v) =>
-        nearest(v, probes).iterator.map(cid => (id, v, cid))
+        probeCells(v, cb.value, probes).iterator.map(cid => (id, v, cid))
       }).toDF("query_id", "qe", "cid")
-
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cs").desc, col("neighbor_id"))
-    broadcast(queryCells).join(corpusCells, Seq("cid"))
+    rankTopK(broadcast(queryCells).join(corpusCells, Seq("cid"))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), cosineF(col("qe"), col("ce")).as("cs"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cs"))
+      .select(col("query_id"), col("neighbor_id"), cosineF(col("qe"), col("ce")).as("cs")), k)
   }
 
   /** IVF-SQ8 composed index: IVF cell probing bounds WHICH corpus rows
@@ -1186,19 +1299,10 @@ object Similarity {
   def ivfSq8Knn(queries: DataFrame, corpus: DataFrame, k: Int,
       probes: Int = 0, centEvery: Int = 50, maxCents: Int = 65536,
       candMult: Int = 4): DataFrame = {
-    val sp = corpus.sparkSession
-    import sp.implicits._
-    val cents = corpus.filter(col("vec_id") % centEvery === 0)
-      .select(col("vec_id").cast("long"), col("embedding"))
-      .orderBy(col("vec_id")).limit(maxCents)
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
-    require(cents.nonEmpty,
-      s"no centroids: no corpus vec_id divisible by $centEvery — lower centEvery")
-    val p = if (probes > 0) probes
-      else math.max(4, math.ceil(IvfAutoProbeFraction * cents.length).toInt)
+    val cents = sampledCells(corpus, "vec_id", "embedding", centEvery, maxCents)
     val bounds = sq8Bounds(corpus, "embedding")
     ivfSq8KnnFromIndex(queries, ivfSq8Index(corpus, cents, bounds),
-      corpus, k, p, cents, bounds, candMult)
+      corpus, k, autoProbes(probes, cents.length), cents, bounds, candMult)
   }
 
   /** [[ivfSq8Knn]] with a TRAINED fixed-size codebook — the primary
@@ -1229,31 +1333,11 @@ object Similarity {
     import sp.implicits._
     val cb = sp.sparkContext.broadcast(cents)
     val bb = sp.sparkContext.broadcast(bounds)
-    corpus.select(col("vec_id").cast("long"), col("embedding"))
-      .filter(col("vec_id").isNotNull && col("embedding").isNotNull)
-      .as[(Long, Array[Float])]
+    idVectors(corpus)
       .mapPartitions { it =>
         val cs = cb.value
         val (m, s) = bb.value
-        it.map { case (id, v) =>
-          var best = cs(0)._1; var bestCs = Double.NegativeInfinity
-          var c = 0
-          while (c < cs.length) {
-            val sc = cosineKernel(v, cs(c)._2)
-            if (sc > bestCs) { bestCs = sc; best = cs(c)._1 } // ties → lower cid
-            c += 1
-          }
-          val n = math.min(v.length, m.length)
-          val codes = new Array[Byte](n)
-          var i = 0
-          while (i < n) {
-            val sSafe = if (s(i) == 0.0) 1.0 else s(i)
-            codes(i) = math.min(255.0, math.max(0.0,
-              math.floor((v(i).toDouble - m(i)) / sSafe * 256.0))).toInt.toByte
-            i += 1
-          }
-          (id, best, codes)
-        }
+        it.map { case (id, v) => (id, cs(nearestCell(v, cs))._1, sq8Code(v, m, s)) }
       }.toDF("vec_id", "cid", "codes")
   }
 
@@ -1301,22 +1385,11 @@ object Similarity {
     require(candMult >= 1, "candMult must be positive")
     val sp = corpus.sparkSession
     import sp.implicits._
-    val qCollected = collectQueryVectors(queries)
-    // probe cells per query, computed driver-side against the codebook:
-    // same (-round6 cosine, cid) order as ivfProbeRerank's nearest()
-    val qProbes: Map[Long, Array[(Long, Array[Float])]] = {
-      val byCell = scala.collection.mutable.Map
-        .empty[Long, scala.collection.mutable.ArrayBuffer[(Long, Array[Float])]]
-      qCollected.foreach { case (qid, qv) =>
-        cents.map { case (cid, ce) => (cid, cosineKernel(qv, ce)) }
-          .sortBy { case (cid, cs) => (-cs, cid) }.take(probes)
-          .foreach { case (cid, _) =>
-            byCell.getOrElseUpdate(cid,
-              scala.collection.mutable.ArrayBuffer.empty) += ((qid, qv))
-          }
-      }
-      byCell.map { case (cid, qs) => (cid, qs.toArray) }.toMap
-    }
+    // the queries probing each cell, grouped driver-side
+    val qProbes: Map[Long, Array[(Long, Array[Float])]] =
+      collectQueryVectors(queries)
+        .flatMap { q => probeCells(q._2, cents, probes).map(cid => (cid, q)) }
+        .groupBy(_._1).map { case (cid, qs) => (cid, qs.map(_._2)) }
     val qb = sp.sparkContext.broadcast(qProbes)
     val bb = sp.sparkContext.broadcast(bounds)
     // quantized candidate scan: probed cells only, codes only
@@ -1331,37 +1404,15 @@ object Similarity {
             case None => Iterator.empty // cell no query probes: skipped
             case Some(qs) =>
               // decode the cell midpoint once, score every probing query
-              val rec = new Array[Double](cd.length)
-              var i = 0
-              while (i < cd.length) {
-                rec(i) =
-                  if (s(i) == 0.0) m(i)
-                  else m(i) + ((cd(i) & 0xFF).toDouble + 0.5) * s(i) / 256.0
-                i += 1
-              }
+              val rec = sq8Decode(cd, m, s)
               qs.iterator.filter(_._1 != nid).map { case (qid, qv) =>
                 (qid, nid, cosineKernelFD(qv, rec))
               }
           }
         }
       }.toDF("query_id", "neighbor_id", "acs")
-    val wApprox = Window.partitionBy(col("query_id"))
-      .orderBy(col("acs").desc, col("neighbor_id"))
-    val cands = approx
-      .withColumn("_crank", row_number().over(wApprox))
-      .filter(col("_crank") <= k * candMult)
-      .select(col("query_id"), col("neighbor_id"))
-    // exact rerank: floats touched for the survivors only
-    val q = broadcast(queries.select(col("vec_id").as("query_id"),
-      col("embedding").as("qe")))
-    val c = corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"))
-    val wExact = Window.partitionBy(col("query_id"))
-      .orderBy(col("cs").desc, col("neighbor_id"))
-    cands.join(c, Seq("neighbor_id")).join(q, Seq("query_id"))
-      .withColumn("cs", cosineF(col("qe"), col("ce")))
-      .withColumn("rank", row_number().over(wExact))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cs"))
+    exactRerank(topCandidates(approx, k * candMult, "acs", ascending = false),
+      queries, corpus, k)
   }
 
   /** Persist a cell-keyed ANN index (the `(vec_id, cid, codes)` frame of
@@ -1573,10 +1624,8 @@ object Similarity {
       cents: Array[(Long, Array[Float])],
       bounds: (Array[Double], Array[Double]), candMult: Int = 4): DataFrame = {
     val sp = corpus.sparkSession
-    val probedCells = collectQueryVectors(queries).flatMap { case (_, qv) =>
-      cents.map { case (cid, ce) => (cid, cosineKernel(qv, ce)) }
-        .sortBy { case (cid, cs) => (-cs, cid) }.take(probes).map(_._1)
-    }.distinct.toIndexedSeq
+    val probedCells = collectQueryVectors(queries)
+      .flatMap { case (_, qv) => probeCells(qv, cents, probes) }.distinct.toIndexedSeq
     val pruned = readCellIndex(sp, indexPath, probedCells)
     val dels = readCellTombstoneIds(sp, indexPath)
     val served =
@@ -1600,17 +1649,9 @@ object Similarity {
     * cell-local candidates. The graph is corpus-sized × m rows of two
     * longs — far smaller than the embeddings it indexes. */
   def nswGraph(corpus: DataFrame, m: Int = 16, centEvery: Int = 50,
-      maxCents: Int = 65536): DataFrame = {
-    val sp = corpus.sparkSession
-    import sp.implicits._
-    val cents = corpus.filter(col("vec_id") % centEvery === 0)
-      .select(col("vec_id").cast("long"), col("embedding"))
-      .orderBy(col("vec_id")).limit(maxCents)
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
-    require(cents.nonEmpty,
-      s"no centroids: no corpus vec_id divisible by $centEvery — lower centEvery")
-    nswGraphOn(corpus, cents, m)
-  }
+      maxCents: Int = 65536): DataFrame =
+    nswGraphOn(corpus,
+      sampledCells(corpus, "vec_id", "embedding", centEvery, maxCents), m)
 
   /** [[nswGraph]] on an EXPLICIT centroid set (the trained-codebook
     * primary path feeds [[kmeansCodebook]] cells here). Edges are the
@@ -1650,29 +1691,16 @@ object Similarity {
       .select(col("node_id"), col("nbr_id"))
   }
 
-  /** Nearest-centroid assignment carrying the vector:
-    * `(vec_id, cid, e)`. Round-6 cosine, ties → lower cid (the
-    * [[ivfSq8Index]] kernel convention). */
+  /** [[nearestCell]] assignment carrying the vector: `(vec_id, cid, e)`. */
   private def nswAssign(corpus: DataFrame,
       cents: Array[(Long, Array[Float])]): DataFrame = {
     val sp = corpus.sparkSession
     import sp.implicits._
     val cb = sp.sparkContext.broadcast(cents)
-    corpus.select(col("vec_id").cast("long"), col("embedding"))
-      .filter(col("vec_id").isNotNull && col("embedding").isNotNull)
-      .as[(Long, Array[Float])]
+    idVectors(corpus)
       .mapPartitions { it =>
         val cs = cb.value
-        it.map { case (id, v) =>
-          var best = cs(0)._1; var bestCs = Double.NegativeInfinity
-          var c = 0
-          while (c < cs.length) {
-            val sc = cosineKernel(v, cs(c)._2) // round-6: ties → lower cid
-            if (sc > bestCs) { bestCs = sc; best = cs(c)._1 }
-            c += 1
-          }
-          (id, best, v)
-        }
+        it.map { case (id, v) => (id, cs(nearestCell(v, cs))._1, v) }
       }.toDF("vec_id", "cid", "e")
   }
 
@@ -2088,13 +2116,7 @@ object Similarity {
     require(beam >= 1, "beam must be positive")
     require(entryQuota >= 1, "entryQuota must be positive")
     val sp = corpus.sparkSession
-    import sp.implicits._
-    val cents = corpus.filter(col("vec_id") % centEvery === 0)
-      .select(col("vec_id").cast("long"), col("embedding"))
-      .orderBy(col("vec_id")).limit(maxCents)
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
-    require(cents.nonEmpty,
-      s"no centroids: no corpus vec_id divisible by $centEvery — lower centEvery")
+    val cents = sampledCells(corpus, "vec_id", "embedding", centEvery, maxCents)
     // one assignment scan feeds every layer's graph (cascadeKnn discipline)
     val asg = nswAssign(corpus, cents).localCheckpoint(true)
     val qb = sp.sparkContext.broadcast(collectQueryVectors(queries))
@@ -2153,12 +2175,7 @@ object Similarity {
     require(entryQuota >= 1, "entryQuota must be positive")
     val sp = corpus.sparkSession
     import sp.implicits._
-    val cents = corpus.filter(col("vec_id") % centEvery === 0)
-      .select(col("vec_id").cast("long"), col("embedding"))
-      .orderBy(col("vec_id")).limit(maxCents)
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
-    require(cents.nonEmpty,
-      s"no centroids: no corpus vec_id divisible by $centEvery — lower centEvery")
+    val cents = sampledCells(corpus, "vec_id", "embedding", centEvery, maxCents)
     val asg = nswAssign(corpus, cents).localCheckpoint(true)
     val strides: IndexedSeq[Long] =
       (0 to maxLevel).map(l => (1 to l).foldLeft(1L)((s, _) => s * levelBase))
@@ -2546,26 +2563,16 @@ object Similarity {
     require(k >= 1 && iters >= 1, "k and iters must be positive")
     val sp = corpus.sparkSession
     import sp.implicits._
-    val vecs = corpus.select(col(idCol).cast("long"), col(vecCol))
-      .filter(col(idCol).isNotNull && col(vecCol).isNotNull)
-      .as[(Long, Array[Float])]
+    val vecs = idVectors(corpus, idCol, vecCol)
     var cents: Array[Array[Float]] =
       vecs.orderBy(col(idCol)).limit(k).collect().map(_._2)
     require(cents.nonEmpty, "empty corpus")
     for (_ <- 0 until iters) {
-      val bc = sp.sparkContext.broadcast(cents)
+      val bc = sp.sparkContext.broadcast(
+        cents.zipWithIndex.map { case (c, i) => (i.toLong, c) })
       val assigned = vecs.mapPartitions { it =>
         val cs = bc.value
-        it.map { case (_, v) =>
-          var best = 0; var bestCs = Double.NegativeInfinity
-          var c = 0
-          while (c < cs.length) {
-            val s = cosineKernel(v, cs(c))
-            if (s > bestCs) { bestCs = s; best = c }
-            c += 1
-          }
-          (best, v)
-        }
+        it.map { case (_, v) => (nearestCell(v, cs), v) }
       }.toDF("cluster", "v")
       val sums = assigned
         .select(col("cluster"), posexplode(col("v")).as(Seq("dim", "x")))
@@ -2622,29 +2629,12 @@ object Similarity {
     require(blockSize >= 1, "blockSize must be positive")
     val sp = corpus.sparkSession
     import sp.implicits._
-    val cents = corpus.filter(col(idCol) % centEvery === 0)
-      .select(col(idCol).cast("long"), col(vecCol))
-      .filter(col(idCol).isNotNull && col(vecCol).isNotNull)
-      .orderBy(col(idCol)).limit(maxCents)
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
-    require(cents.nonEmpty,
-      s"no centroids: no corpus $idCol divisible by $centEvery — lower centEvery")
-    val cb = sp.sparkContext.broadcast(cents)
-    val cells = corpus.select(col(idCol).cast("long"), col(vecCol))
-      .filter(col(idCol).isNotNull && col(vecCol).isNotNull)
-      .as[(Long, Array[Float])]
+    val cb = sp.sparkContext.broadcast(
+      sampledCells(corpus, idCol, vecCol, centEvery, maxCents))
+    val cells = idVectors(corpus, idCol, vecCol)
       .mapPartitions { it =>
         val cs = cb.value
-        it.map { case (id, v) =>
-          var best = cs(0)._1; var bestCs = Double.NegativeInfinity
-          var c = 0
-          while (c < cs.length) {
-            val s = cosineKernel(v, cs(c)._2)
-            if (s > bestCs) { bestCs = s; best = cs(c)._1 } // ties → lower cid
-            c += 1
-          }
-          (id, v, best)
-        }
+        it.map { case (id, v) => (id, v, cs(nearestCell(v, cs))._1) }
       }.toDF("vec_id", "v", "cid")
     // hot-cell guard: per-cell block grid. |cells| counts are one tiny
     // agg (≤ nCents rows — broadcastable by construction); each member
@@ -2728,9 +2718,7 @@ object Similarity {
     val qb = sp.sparkContext.broadcast(collectQueryVectors(queries)
       .map { case (id, v) => (id, v, bucketOf(v, signs)) })
     val sb = sp.sparkContext.broadcast(signs)
-    val pairs = corpus.select(col("vec_id").cast("long"), col("embedding"))
-      .filter(col("vec_id").isNotNull && col("embedding").isNotNull)
-      .as[(Long, Array[Float])]
+    val pairs = idVectors(corpus)
       .mapPartitions { it =>
         val qs = qb.value
         val sg = sb.value
@@ -2743,9 +2731,7 @@ object Similarity {
             }
         }
       }.toDF("query_id", "neighbor_id", "cs")
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cs").desc, col("neighbor_id"))
-    pairs.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cs"))
+    rankTopK(pairs, k)
   }
 
   /** Unit-L2-normalize to doubles (in array order, like [[cosineKernel]]'s
@@ -2793,19 +2779,6 @@ object Similarity {
     }
   }
 
-  /** Squared-L2-then-sqrt distance between a subvector slice of `v`
-    * starting at `off` and codebook entry `c`, rounded to 6 (the
-    * per-subspace PQ distance; HALF_UP round-6 is the cross-engine
-    * contract shared with [[cosineKernel]]). */
-  private def subDist(v: Array[Double], off: Int, c: Array[Double]): Double = {
-    var s = 0.0; var i = 0
-    while (i < c.length) {
-      val dd = v(off + i) - c(i)
-      s += dd * dd; i += 1
-    }
-    round6(math.sqrt(s))
-  }
-
   /** MATERIALIZE the PQ code columns: `m` small integers per vector —
     * for each subspace, the codebook entry minimizing round-6 L2 to the
     * vector's subvector (ties to the lower code id). Map-only over a
@@ -2819,32 +2792,13 @@ object Similarity {
     import sp.implicits._
     val sd = books(0)(0)._2.length
     val bb = sp.sparkContext.broadcast(books)
-    corpus.select(col(idCol).cast("long"), col(vecCol))
-      .filter(col(idCol).isNotNull && col(vecCol).isNotNull)
-      .as[(Long, Array[Float])]
+    idVectors(corpus, idCol, vecCol)
       .mapPartitions { it =>
         val bks = bb.value
         it.map { case (id, raw) =>
           require(raw.length == bks.length * sd,
             s"vector ${id} has ${raw.length} dims, codebook expects ${bks.length * sd}")
-          val v = normalizeKernel(raw)
-          val codes = new Array[Long](bks.length)
-          var j = 0
-          while (j < bks.length) {
-            var best = 0L; var bestD = Double.PositiveInfinity
-            val bk = bks(j)
-            var e = 0
-            while (e < bk.length) {
-              val dd = subDist(v, j * sd, bk(e)._2)
-              if (dd < bestD || (dd == bestD && bk(e)._1 < best)) {
-                bestD = dd; best = bk(e)._1
-              }
-              e += 1
-            }
-            codes(j) = best
-            j += 1
-          }
-          (id, codes)
+          (id, pqNearestCodes(normalizeKernel(raw), bks))
         }
       }.toDF("vec_id", "codes")
   }
@@ -2883,67 +2837,14 @@ object Similarity {
   /** Per-subspace Lloyd-trained PQ codebooks — real PQ (the sampled
     * [[pqCodebooks]] is the engine-portable ORACLE definition; its
     * entries are arbitrary corpus subvectors, so quantization distortion
-    * is high and recall caps out). Init is the subvectors of the
-    * `kCodes` lowest-id vectors; each iteration assigns every subvector
-    * to its nearest code in a broadcast-codebook kernel and recomputes
-    * means relationally — (subspace, code, dim) DECIMAL sums, so the
-    * trained codebook is independent of partition merge order, and all
-    * `m` subspaces train in the SAME aggregation pass (one shuffle per
-    * iteration, not m). Empty cells keep their previous entry. Only the
-    * m × kCodes × dims/m codebook lives on the driver. */
+    * is high and recall caps out): [[lloydBooks]] over the
+    * unit-normalized vectors. Only the m × kCodes × dims/m codebook
+    * lives on the driver. */
   def pqCodebooksTrained(corpus: DataFrame, idCol: String, vecCol: String,
       m: Int, kCodes: Int = 64, iters: Int = 3): Array[Array[(Long, Array[Double])]] = {
     require(m >= 1 && kCodes >= 1 && iters >= 0, "bad pq training params")
-    val sp = corpus.sparkSession
-    import sp.implicits._
-    val vecs = corpus.select(col(idCol).cast("long"), col(vecCol))
-      .filter(col(idCol).isNotNull && col(vecCol).isNotNull)
-      .as[(Long, Array[Float])]
-    val seed = vecs.orderBy(col(idCol)).limit(kCodes).collect()
-    require(seed.nonEmpty, "empty corpus")
-    val dims = seed.head._2.length
-    require(dims % m == 0, s"dims=$dims not divisible by m=$m")
-    val sd = dims / m
-    var books: Array[Array[Array[Double]]] = Array.tabulate(m) { j =>
-      seed.map { case (_, v) =>
-        java.util.Arrays.copyOfRange(normalizeKernel(v), j * sd, (j + 1) * sd)
-      }
-    }
-    for (_ <- 0 until iters) {
-      val bb = sp.sparkContext.broadcast(books)
-      val sums = vecs.mapPartitions { it =>
-        val bks = bb.value
-        it.flatMap { case (_, raw) =>
-          val v = normalizeKernel(raw)
-          (0 until bks.length).iterator.flatMap { j =>
-            val bk = bks(j)
-            var best = 0; var bestD = Double.PositiveInfinity
-            var e = 0
-            while (e < bk.length) {
-              var s = 0.0; var i = 0
-              while (i < sd) {
-                val dd = v(j * sd + i) - bk(e)(i); s += dd * dd; i += 1
-              }
-              if (s < bestD) { bestD = s; best = e }
-              e += 1
-            }
-            (0 until sd).iterator.map(i => (j, best, i, v(j * sd + i)))
-          }
-        }
-      }.toDF("j", "code", "dim", "x")
-        .groupBy(col("j"), col("code"), col("dim"))
-        .agg(sum(col("x").cast(org.apache.spark.sql.types.DecimalType(28, 12))).as("s"),
-          count(lit(1)).as("n"))
-        .collect()
-      val next = books.map(_.map(_.clone()))
-      sums.foreach { r =>
-        next(r.getInt(0))(r.getInt(1))(r.getInt(2)) =
-          r.getDecimal(3).doubleValue() / r.getLong(4)
-      }
-      bb.destroy()
-      books = next
-    }
-    books.map(_.zipWithIndex.map { case (cv, e) => (e.toLong, cv) })
+    lloydBooks(idVectors(corpus, idCol, vecCol), idCol, m, kCodes, iters,
+      normalizeKernel)
   }
 
   /** [[pqKnn]] over Lloyd-trained codebooks (see [[pqCodebooksTrained]])
@@ -2972,17 +2873,8 @@ object Similarity {
   def ivfPqKnn(queries: DataFrame, corpus: DataFrame, k: Int,
       probes: Int = 0, centEvery: Int = 50, maxCents: Int = 65536,
       m: Int = 16, candMult: Int = 16): DataFrame = {
-    val sp = corpus.sparkSession
-    import sp.implicits._
-    val cents = corpus.filter(col("vec_id") % centEvery === 0)
-      .select(col("vec_id").cast("long"), col("embedding"))
-      .orderBy(col("vec_id")).limit(maxCents)
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
-    require(cents.nonEmpty,
-      s"no centroids: no corpus vec_id divisible by $centEvery — lower centEvery")
-    val p = if (probes > 0) probes
-      else math.max(4, math.ceil(IvfAutoProbeFraction * cents.length).toInt)
-    ivfPqProbeScan(queries, corpus, k, p, cents,
+    val cents = sampledCells(corpus, "vec_id", "embedding", centEvery, maxCents)
+    ivfPqProbeScan(queries, corpus, k, autoProbes(probes, cents.length), cents,
       pqCodebooks(corpus, "vec_id", "embedding", m, centEvery), candMult)
   }
 
@@ -2999,26 +2891,20 @@ object Similarity {
       pqCodebooksTrained(corpus, "vec_id", "embedding", m, kCodes), candMult)
   }
 
-  /** Assign `raw` to its argmax-cosine cell (ties to the lower id via
-    * first-wins over the id-sorted array) and return (cellId, residual
-    * of the NORMALIZED vector against the normalized centroid) — the
-    * IVFADC encoding primitive, object-level so task closures never
-    * capture enclosing method state. */
+  /** `raw`'s [[nearestCell]] and the residual of the NORMALIZED vector
+    * against the normalized centroid — the IVFADC encoding primitive. */
   private def residualAgainst(raw: Array[Float],
       cells: Array[(Long, Array[Float])]): (Long, Array[Double]) = {
-    var bestC = 0; var bestS = Double.NegativeInfinity
-    var ci = 0
-    while (ci < cells.length) {
-      val s = cosineKernel(raw, cells(ci)._2)
-      if (s > bestS) { bestS = s; bestC = ci }
-      ci += 1
-    }
-    val v = normalizeKernel(raw)
-    val c = normalizeKernel(cells(bestC)._2)
+    val (cid, ce) = cells(nearestCell(raw, cells))
+    (cid, residual(normalizeKernel(raw), normalizeKernel(ce)))
+  }
+
+  /** `v − c` over `v`'s length (missing centroid dims count as 0). */
+  private def residual(v: Array[Double], c: Array[Double]): Array[Double] = {
     val r = new Array[Double](v.length)
     var i = 0
     while (i < v.length) { r(i) = v(i) - (if (i < c.length) c(i) else 0.0); i += 1 }
-    (cells(bestC)._1, r)
+    r
   }
 
   /** TRUE IVFADC (Jégou et al. 2011 §IV): the PQ codebooks quantize the
@@ -3030,9 +2916,9 @@ object Similarity {
     * `IVFx,PQy` over residuals. [[ivfPqKnnTrained]] (no residuals) stays
     * as the simpler spec'd variant; this is the faithful recipe.
     *
-    * Training: residual books come from the SAME relational DECIMAL
-    * k-means pass shape as [[pqCodebooksTrained]], run over the
-    * residual stream (map-only against broadcast cells). Scan: one
+    * Training: [[lloydBooks]] over the residual stream (map-only
+    * against broadcast cells), as [[pqCodebooksTrained]] does over
+    * normalized vectors. Scan: one
     * corpus pass assigns + encodes; per-task ADC tables are
     * |Q| × probes × m × kCodes micro-unit Longs (kilobytes). Exact
     * cosine rerank of the candMult·k survivors as everywhere. */
@@ -3045,74 +2931,19 @@ object Similarity {
     val cellArr = kmeansCodebook(corpus, "vec_id", "embedding", nCells, iters)
       .zipWithIndex.map { case (c, i) => (i.toLong, c) }
     val cb = sp.sparkContext.broadcast(cellArr)
-    val vecs = corpus.select(col("vec_id").cast("long"), col("embedding"))
-      .filter(col("vec_id").isNotNull && col("embedding").isNotNull)
-      .as[(Long, Array[Float])]
-    // train residual PQ books: seed from the kCodes lowest-id residuals,
-    // then pqIters relational DECIMAL update passes
-    val dims = vecs.orderBy(col("vec_id")).limit(1).collect().head._2.length
-    require(dims % m == 0, s"dims=$dims not divisible by m=$m")
-    val sd = dims / m
-    val seed = vecs.orderBy(col("vec_id")).limit(kCodes).collect()
-      .map { case (_, raw) => residualAgainst(raw, cellArr)._2 }
-    var books: Array[Array[Array[Double]]] = Array.tabulate(m) { j =>
-      seed.map(r => java.util.Arrays.copyOfRange(r, j * sd, (j + 1) * sd))
-    }
-    for (_ <- 0 until pqIters) {
-      val bb = sp.sparkContext.broadcast(books)
-      val sums = vecs.mapPartitions { it =>
-        val bks = bb.value
-        val cells = cb.value
-        it.flatMap { case (_, raw) =>
-          val r = residualAgainst(raw, cells)._2
-          (0 until bks.length).iterator.flatMap { j =>
-            val bk = bks(j)
-            var best = 0; var bestD = Double.PositiveInfinity
-            var e = 0
-            while (e < bk.length) {
-              var s = 0.0; var i = 0
-              while (i < sd) { val dd = r(j * sd + i) - bk(e)(i); s += dd * dd; i += 1 }
-              if (s < bestD) { bestD = s; best = e }
-              e += 1
-            }
-            (0 until sd).iterator.map(i => (j, best, i, r(j * sd + i)))
-          }
-        }
-      }.toDF("j", "code", "dim", "x")
-        .groupBy(col("j"), col("code"), col("dim"))
-        .agg(sum(col("x").cast(org.apache.spark.sql.types.DecimalType(28, 12))).as("s"),
-          count(lit(1)).as("n"))
-        .collect()
-      val next = books.map(_.map(_.clone()))
-      sums.foreach { r =>
-        next(r.getInt(0))(r.getInt(1))(r.getInt(2)) =
-          r.getDecimal(3).doubleValue() / r.getLong(4)
-      }
-      bb.destroy()
-      books = next
-    }
-    val fb = sp.sparkContext.broadcast(books)
-    val qCollected = collectQueryVectors(queries)
+    val vecs = idVectors(corpus)
+    // residual PQ books: seeded from the kCodes lowest-id residuals
+    val books = lloydBooks(vecs, "vec_id", m, kCodes, pqIters,
+      raw => residualAgainst(raw, cb.value)._2)
+    val sd = books(0)(0)._2.length
+    val fb = sp.sparkContext.broadcast(books.map(_.map(_._2)))
     // per-query: probed cells + per-cell ADC tables over (q − c) vs book
-    val qMeta: Array[(Long, scala.collection.immutable.Map[Long, Array[Array[Long]]])] =
-      qCollected.map { case (qid, qraw) =>
+    val qMeta: Array[(Long, Map[Long, Array[Map[Long, Long]]])] =
+      collectQueryVectors(queries).map { case (qid, qraw) =>
         val qv = normalizeKernel(qraw)
-        val probed = cellArr.map { case (cid, ce) => (cid, cosineKernel(qraw, ce)) }
-          .sortBy { case (cid, s) => (-s, cid) }.take(probes)
-        val tables = probed.map { case (cid, _) =>
-          val c = normalizeKernel(cellArr(cid.toInt)._2)
-          val qr = new Array[Double](qv.length)
-          var i = 0
-          while (i < qv.length) { qr(i) = qv(i) - (if (i < c.length) c(i) else 0.0); i += 1 }
-          cid -> Array.tabulate(m) { j =>
-            books(j).map { cv =>
-              var s = 0.0; var i2 = 0
-              while (i2 < sd) { val dd = qr(j * sd + i2) - cv(i2); s += dd * dd; i2 += 1 }
-              math.round(round6(math.sqrt(s)) * 1e6)
-            }
-          }
-        }.toMap
-        (qid, tables)
+        (qid, probeCells(qraw, cellArr, probes).map { cid =>
+          cid -> adcTables(residual(qv, normalizeKernel(cellArr(cid.toInt)._2)), books)
+        }.toMap)
       }
     val qb = sp.sparkContext.broadcast(qMeta)
     val approx = vecs.mapPartitions { it =>
@@ -3120,47 +2951,16 @@ object Similarity {
         val cells = cb.value
         it.flatMap { case (nid, raw) =>
           val (cid, r) = residualAgainst(raw, cells)
-          val codes = new Array[Int](bks.length)
+          val codes = new Array[Long](bks.length)
           var j = 0
-          while (j < bks.length) {
-            val bk = bks(j)
-            var best = 0; var bestD = Double.PositiveInfinity
-            var e = 0
-            while (e < bk.length) {
-              var s = 0.0; var i = 0
-              while (i < sd) { val dd = r(j * sd + i) - bk(e)(i); s += dd * dd; i += 1 }
-              if (s < bestD) { bestD = s; best = e }
-              e += 1
-            }
-            codes(j) = best
-            j += 1
-          }
+          while (j < bks.length) { codes(j) = lloydNearest(r, j * sd, bks(j)); j += 1 }
           qs.iterator.filter { case (qid, tables) =>
             qid != nid && tables.contains(cid)
-          }.map { case (qid, tables) =>
-            val tq = tables(cid)
-            var s = 0L; var jj = 0
-            while (jj < codes.length) { s += tq(jj)(codes(jj)); jj += 1 }
-            (qid, nid, s)
-          }
+          }.map { case (qid, tables) => (qid, nid, adcScore(tables(cid), codes)) }
         }
       }.toDF("query_id", "neighbor_id", "adc")
-    val wApprox = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc").asc, col("neighbor_id"))
-    val cands = approx
-      .withColumn("_crank", row_number().over(wApprox))
-      .filter(col("_crank") <= k * candMult)
-      .select(col("query_id"), col("neighbor_id"))
-    val q = broadcast(queries.select(col("vec_id").as("query_id"),
-      col("embedding").as("qe")))
-    val c = corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"))
-    val wExact = Window.partitionBy(col("query_id"))
-      .orderBy(col("cs").desc, col("neighbor_id"))
-    cands.join(c, Seq("neighbor_id")).join(q, Seq("query_id"))
-      .withColumn("cs", cosineF(col("qe"), col("ce")))
-      .withColumn("rank", row_number().over(wExact))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cs"))
+    exactRerank(topCandidates(approx, k * candMult, "adc", ascending = true),
+      queries, corpus, k)
   }
 
   private def ivfPqProbeScan(queries: DataFrame, corpus: DataFrame, k: Int,
@@ -3169,83 +2969,34 @@ object Similarity {
     require(k >= 1 && candMult >= 1, "k and candMult must be positive")
     val sp = corpus.sparkSession
     import sp.implicits._
-    val sd = books(0)(0)._2.length
     val cc = sp.sparkContext.broadcast(cents)
     val bb = sp.sparkContext.broadcast(books)
-    val qCollected = collectQueryVectors(queries)
     // per-query probe set + ADC tables, computed once on the driver
     // (|Q| × probes cells and |Q| × m × nCodes table entries — small
     // side by contract, like every query broadcast in this family)
-    val qMeta: Array[(Long, Set[Long], Array[scala.collection.immutable.Map[Long, Long]])] =
-      qCollected.map { case (qid, qraw) =>
-        val probed = cents.map { case (cid, ce) => (cid, cosineKernel(qraw, ce)) }
-          .sortBy { case (cid, cs) => (-cs, cid) }.take(probes).map(_._1).toSet
-        val qv = normalizeKernel(qraw)
-        val tables = books.zipWithIndex.map { case (bk, j) =>
-          bk.map { case (cid, cv) =>
-            cid -> math.round(subDist(qv, j * sd, cv) * 1e6)
-          }.toMap
-        }
-        (qid, probed, tables)
+    val qMeta: Array[(Long, Set[Long], Array[Map[Long, Long]])] =
+      collectQueryVectors(queries).map { case (qid, qraw) =>
+        (qid, probeCells(qraw, cents, probes).toSet,
+          adcTables(normalizeKernel(qraw), books))
       }
     val qb = sp.sparkContext.broadcast(qMeta)
     // one corpus pass: assign cell + PQ-encode, score only the queries
     // probing that cell — the scan's real 100 TB shape reads a STORED
     // (cid, codes) index instead (the ivfSq8Index contract); recomputing
     // here keeps the oracle definition self-contained
-    val approx = corpus.select(col("vec_id").cast("long"), col("embedding"))
-      .filter(col("vec_id").isNotNull && col("embedding").isNotNull)
-      .as[(Long, Array[Float])]
+    val approx = idVectors(corpus)
       .mapPartitions { it =>
         val cs = cc.value; val bks = bb.value; val qs = qb.value
         it.flatMap { case (nid, raw) =>
-          var bestC = 0L; var bestS = Double.NegativeInfinity
-          var ci = 0
-          while (ci < cs.length) {
-            val s = cosineKernel(raw, cs(ci)._2)
-            if (s > bestS) { bestS = s; bestC = cs(ci)._1 }
-            ci += 1
-          }
-          val v = normalizeKernel(raw)
-          val codes = new Array[Long](bks.length)
-          var j = 0
-          while (j < bks.length) {
-            var best = 0L; var bestD = Double.PositiveInfinity
-            val bk = bks(j)
-            var e = 0
-            while (e < bk.length) {
-              val dd = subDist(v, j * sd, bk(e)._2)
-              if (dd < bestD) { bestD = dd; best = bk(e)._1 }
-              e += 1
-            }
-            codes(j) = best
-            j += 1
-          }
+          val cid = cs(nearestCell(raw, cs))._1
+          val codes = pqNearestCodes(normalizeKernel(raw), bks)
           qs.iterator.filter { case (qid, probed, _) =>
-            qid != nid && probed.contains(bestC)
-          }.map { case (qid, _, tables) =>
-            var s = 0L; var jj = 0
-            while (jj < codes.length) { s += tables(jj)(codes(jj)); jj += 1 }
-            (qid, nid, s)
-          }
+            qid != nid && probed.contains(cid)
+          }.map { case (qid, _, tables) => (qid, nid, adcScore(tables, codes)) }
         }
       }.toDF("query_id", "neighbor_id", "adc")
-    val wApprox = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc").asc, col("neighbor_id"))
-    val cands = approx
-      .withColumn("_crank", row_number().over(wApprox))
-      .filter(col("_crank") <= k * candMult)
-      .select(col("query_id"), col("neighbor_id"))
-    val q = broadcast(queries.select(col("vec_id").as("query_id"),
-      col("embedding").as("qe")))
-    val c = corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"))
-    val wExact = Window.partitionBy(col("query_id"))
-      .orderBy(col("cs").desc, col("neighbor_id"))
-    cands.join(c, Seq("neighbor_id")).join(q, Seq("query_id"))
-      .withColumn("cs", cosineF(col("qe"), col("ce")))
-      .withColumn("rank", row_number().over(wExact))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cs"))
+    exactRerank(topCandidates(approx, k * candMult, "adc", ascending = true),
+      queries, corpus, k)
   }
 
   private def pqKnnWithBooks(queries: DataFrame, corpus: DataFrame, k: Int,
@@ -3289,63 +3040,26 @@ object Similarity {
     // are arbitrary corpus subvectors), so a fixed k·candMult rerank
     // budget decays with corpus growth exactly like binaryKnn's fixed
     // 24 did (measured recall@3 0.833 at sf0.01 → 0.633 at sf0.1 with
-    // the fixed 48). candFraction > 0 applies the [[ivfKnn]] auto-probe
-    // rule — budget = max(k·candMult, ceil(candFraction·N)) — so a
-    // constant corpus fraction reranks and recall holds under growth
-    // (20% measures 0.900/0.967 at sf0.01/sf0.1). The Lloyd-TRAINED
-    // paths keep candFraction = 0 (pure k·candMult): their codebooks
-    // are low-distortion, recall is already 1.0, and the zero default
-    // skips the extra count() job so their plans are byte-unchanged.
-    val budget =
-      if (candFraction > 0.0)
-        math.max(k.toLong * candMult,
-          math.ceil(candFraction * codes.count()).toLong)
-      else k.toLong * candMult
-    val sd = books(0)(0)._2.length
-    val qCollected = collectQueryVectors(queries)
-    val qb = sp.sparkContext.broadcast(qCollected)
+    // the fixed 48). candFraction > 0 applies the [[rerankBudget]]
+    // corpus fraction (20% measures 0.900/0.967 at sf0.01/sf0.1). The
+    // Lloyd-TRAINED paths keep candFraction = 0 (pure k·candMult, no
+    // count job): their codebooks are low-distortion and recall is
+    // already 1.0.
+    val budget = rerankBudget(k, candMult, candFraction, codes.count())
+    val qb = sp.sparkContext.broadcast(collectQueryVectors(queries))
     val bb = sp.sparkContext.broadcast(books)
     // ADC scan: codes only; per-partition distance tables in micro-units
     val approx = codes.select(col("vec_id").cast("long"), col("codes"))
       .as[(Long, Array[Long])]
       .mapPartitions { it =>
         val qs = qb.value
-        val bks = bb.value
-        // tables(q)(j): codeId -> round6(L2) in exact micro-units
-        val tables: Array[Array[scala.collection.immutable.Map[Long, Long]]] =
-          qs.map { case (_, qraw) =>
-            val qv = normalizeKernel(qraw)
-            bks.zipWithIndex.map { case (bk, j) =>
-              bk.map { case (cid, cv) =>
-                cid -> math.round(subDist(qv, j * sd, cv) * 1e6)
-              }.toMap
-            }
-          }
+        val tables = qs.map { case (_, qraw) => adcTables(normalizeKernel(qraw), bb.value) }
         it.flatMap { case (nid, cds) =>
           qs.iterator.zipWithIndex.filter(_._1._1 != nid)
-            .map { case ((qid, _), qi) =>
-              var s = 0L; var j = 0
-              val tq = tables(qi)
-              while (j < cds.length) { s += tq(j)(cds(j)); j += 1 }
-              (qid, nid, s)
-            }
+            .map { case ((qid, _), qi) => (qid, nid, adcScore(tables(qi), cds)) }
         }
       }.toDF("query_id", "neighbor_id", "adc")
-    val wApprox = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc").asc, col("neighbor_id"))
-    val cands = approx
-      .withColumn("_crank", row_number().over(wApprox))
-      .filter(col("_crank") <= budget)
-      .select(col("query_id"), col("neighbor_id"))
-    val q = broadcast(queries.select(col("vec_id").as("query_id"),
-      col("embedding").as("qe")))
-    val c = corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"))
-    val wExact = Window.partitionBy(col("query_id"))
-      .orderBy(col("cs").desc, col("neighbor_id"))
-    cands.join(c, Seq("neighbor_id")).join(q, Seq("query_id"))
-      .withColumn("cs", cosineF(col("qe"), col("ce")))
-      .withColumn("rank", row_number().over(wExact))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cs"))
+    exactRerank(topCandidates(approx, budget, "adc", ascending = true),
+      queries, corpus, k)
   }
 }

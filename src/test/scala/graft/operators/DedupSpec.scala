@@ -570,7 +570,7 @@ class DedupSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(agg.getLong(0) === n.toLong, "every path node labeled")
     assert(agg.getLong(1) === 1L && agg.getLong(2) === 0L,
       "one component rooted at node 0")
-    labels.unpersist()
+    Iterate.release(labels)
     ()
   }
 
@@ -616,7 +616,7 @@ class DedupSpec extends AnyFunSuite with BeforeAndAfterAll {
     val nFull = inv.as("a").join(inv.as("b"),
         $"a.s" === $"b.s" && $"a.doc_id" < $"b.doc_id")
       .select($"a.doc_id", $"b.doc_id").distinct().count()
-    prefix.unpersist(); inv.unpersist()
+    Iterate.release(prefix, inv)
     assert(nPrefix < nFull / 5,
       s"prefix filtering should cut candidates hard at tau=0.8: $nPrefix vs $nFull")
     assert(nPrefix > 0, "vacuous: no candidates at all")
@@ -636,7 +636,7 @@ class DedupSpec extends AnyFunSuite with BeforeAndAfterAll {
     val (lazyCands, prefix) = Dedup.prefixCandidates(inv, sizes, 0.5)
     assert(lazyCands.count() === 0L,
       "boilerplate-only overlap must not reach the candidate join")
-    prefix.unpersist(); inv.unpersist()
+    Iterate.release(prefix, inv)
     assert(Dedup.prefixJaccardPairs(boiler, "doc_id", "text", 0.5).count() === 0L)
   }
 

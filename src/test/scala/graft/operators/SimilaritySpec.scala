@@ -179,6 +179,58 @@ class SimilaritySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(codes.forall(c => c.length == 16 && c.forall(valid.contains)))
   }
 
+  test("every index equals exact kNN row for row once its budget covers the corpus") {
+    // probes >= cells and a rerank budget >= N make each index's candidate
+    // set the whole corpus, so the shared exact rerank alone decides the
+    // answer; any stage that drops or duplicates a candidate shows here
+    val e = emb
+    val q = e.filter(col("vec_id") < 5)
+    val n = e.count().toInt
+    val all = Int.MaxValue / 2
+    def rows(df: DataFrame) = df.orderBy("query_id", "rank").collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
+    val exact = rows(Similarity.knnKernel(q, e, 3))
+    assert(exact.length === 15)
+    Seq[(String, () => DataFrame)](
+      ("sq8Knn", () => Similarity.sq8Knn(q, e, 3, candMult = n)),
+      ("rpKnn", () => Similarity.rpKnn(q, e, 3, candFraction = 1.0)),
+      ("ivfKnn", () => Similarity.ivfKnn(q, e, 3, probes = all)),
+      ("ivfKnnTrained", () => Similarity.ivfKnnTrained(q, e, 3, probes = 16)),
+      ("ivfSq8KnnTrained", () => Similarity.ivfSq8KnnTrained(q, e, 3,
+        probes = 16, candMult = n)),
+      ("ivfPqKnn", () => Similarity.ivfPqKnn(q, e, 3, probes = all, candMult = n)),
+      ("ivfPqKnnTrained", () => Similarity.ivfPqKnnTrained(q, e, 3,
+        probes = 16, kCodes = 32, candMult = n)),
+      ("ivfAdcKnnTrained", () => Similarity.ivfAdcKnnTrained(q, e, 3,
+        probes = 16, kCodes = 32, candMult = n))).foreach { case (name, run) =>
+      assert(rows(run()) === exact, s"$name with a corpus-wide budget diverged from exact kNN")
+    }
+  }
+
+  test("a null embedding at a sampled id is dropped from the cells, not scored") {
+    val sp = spark; import sp.implicits._
+    val e = emb
+    val maxId = e.agg(max($"vec_id")).head.getLong(0)
+    val nullId = (maxId / 50 + 1) * 50
+    val withNull = e.unionByName(Seq(nullId).toDF("vec_id")
+      .select($"vec_id", lit(null).cast(e.schema("embedding").dataType).as("embedding"),
+        lit(0).as("label")))
+    val q = e.filter($"vec_id" < 10)
+    def rows(df: DataFrame) = df.orderBy("query_id", "rank").collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
+    Seq[(String, DataFrame => DataFrame)](
+      ("ivfKnn", c => Similarity.ivfKnn(q, c, 3)),
+      ("ivfSq8Knn", c => Similarity.ivfSq8Knn(q, c, 3)),
+      ("ivfPqKnn", c => Similarity.ivfPqKnn(q, c, 3)),
+      ("nswGraph + nswKnn", c => Similarity.nswKnn(q, c, Similarity.nswGraph(c), 3)),
+      ("hnswKnn", c => Similarity.hnswKnn(q, c, 3))).foreach { case (name, run) =>
+      val clean = rows(run(e))
+      assert(clean.length === 30, s"$name: vacuous clean result")
+      assert(rows(run(withNull)) === clean,
+        s"$name: a null embedding at sampled id $nullId changed the result")
+    }
+  }
+
   test("trained PQ codebook is partition-layout independent") {
     // DECIMAL update sums + deterministic seeding: the same corpus in a
     // different physical layout must train byte-identical codebooks
@@ -814,7 +866,12 @@ class SimilaritySpec extends AnyFunSuite with BeforeAndAfterAll {
       ("knnKernel", () => Similarity.knnKernel(over, corpus, 3)),
       ("annKnnKernel", () => Similarity.annKnnKernel(over, corpus, 3)),
       ("binaryKnn", () => Similarity.binaryKnn(over, corpus, 3)),
-      ("sq8Knn", () => Similarity.sq8Knn(over, corpus, 3))).foreach {
+      ("sq8Knn", () => Similarity.sq8Knn(over, corpus, 3)),
+      ("cascadeKnn", () => Similarity.cascadeKnn(over, corpus, 3)),
+      ("rpKnn", () => Similarity.rpKnn(over, corpus, 3)),
+      ("ivfSq8Knn", () => Similarity.ivfSq8Knn(over, corpus, 3, centEvery = 5)),
+      ("pqKnn", () => Similarity.pqKnn(over, corpus, 3, m = 2, centEvery = 5)),
+      ("ivfPqKnn", () => Similarity.ivfPqKnn(over, corpus, 3, centEvery = 5, m = 2))).foreach {
       case (name, run) =>
         val e = intercept[IllegalArgumentException] { run().collect() }
         assert(e.getMessage.contains("MaxBroadcastQueries"),

@@ -359,7 +359,7 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
       val p13 = audit.queryExecution.executedPlan.toString
       assert(p13.contains("partial_"), s"s13 lost map-side combine:\n${p13.take(2000)}")
       assert(!p13.contains("CartesianProduct") && !p13.contains("RunningWindowFunction"))
-    } finally { neighbors.unpersist(); () }
+    } finally graft.operators.Iterate.release(neighbors)
   }
 
   test("q91 hilbert-layout pruned read pushes the residual box filter into the scan") {
@@ -634,7 +634,7 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
       org.apache.spark.sql.functions.lit(1)).as("n"))
     val (cands, prefix) = graft.operators.Dedup.prefixCandidates(inv, sizes, 0.5)
     val p = cands.queryExecution.executedPlan.toString
-    prefix.unpersist(); inv.unpersist()
+    graft.operators.Iterate.release(prefix, inv)
     assert(p.contains("SortMergeJoin") || p.contains("HashJoin"), p.take(3000))
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       p.take(3000))
