@@ -24,6 +24,7 @@ object Bench {
       // conditional and therefore a no-op at scale.
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.schema.GraftExtensions.sizeCodegenCache(spark.sparkContext.getConf)
     // warm up session + parquet readers so no timed query absorbs JVM /
     // codegen / footer-read initialization: touch every table once
     Seq("region", "nation", "customer", "supplier", "part", "orders",

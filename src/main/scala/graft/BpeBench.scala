@@ -25,6 +25,7 @@ object BpeBench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.schema.GraftExtensions.sizeCodegenCache(spark.sparkContext.getConf)
     try {
       val words = spark.read.parquet(s"$sfDir/documents.parquet")
         .filter(col("text").isNotNull).select(md5(col("text")).as("w"))

@@ -92,6 +92,7 @@ object PruneBench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.schema.GraftExtensions.sizeCodegenCache(spark.sparkContext.getConf)
 
     val dir = Files.createTempDirectory("prunebench").toString
     val n = sys.env.getOrElse("SPARK_GRAFT_PRUNE_ROWS", "200000").toInt

@@ -73,6 +73,7 @@ object Verify {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.schema.GraftExtensions.sizeCodegenCache(spark.sparkContext.getConf)
     // purge any previous run's outputs: a failing query must NOT leave
     // stale parquet behind for the compare step to false-PASS on
     def purge(f: java.io.File): Unit = {

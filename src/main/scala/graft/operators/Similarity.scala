@@ -1380,16 +1380,23 @@ object Similarity {
   def ivfSq8KnnFromIndex(queries: DataFrame, index: DataFrame,
       corpus: DataFrame, k: Int, probes: Int,
       cents: Array[(Long, Array[Float])],
-      bounds: (Array[Double], Array[Double]), candMult: Int = 4): DataFrame = {
+      bounds: (Array[Double], Array[Double]), candMult: Int = 4): DataFrame =
+    ivfSq8KnnFromIndex(collectQueryVectors(queries), queries, index, corpus,
+      k, probes, cents, bounds, candMult)
+
+  /** [[ivfSq8KnnFromIndex]] on the query side already collected as `qs`. */
+  private def ivfSq8KnnFromIndex(qs: Array[(Long, Array[Float])],
+      queries: DataFrame, index: DataFrame, corpus: DataFrame, k: Int,
+      probes: Int, cents: Array[(Long, Array[Float])],
+      bounds: (Array[Double], Array[Double]), candMult: Int): DataFrame = {
     require(k >= 1, "k must be positive")
     require(candMult >= 1, "candMult must be positive")
     val sp = corpus.sparkSession
     import sp.implicits._
     // the queries probing each cell, grouped driver-side
     val qProbes: Map[Long, Array[(Long, Array[Float])]] =
-      collectQueryVectors(queries)
-        .flatMap { q => probeCells(q._2, cents, probes).map(cid => (cid, q)) }
-        .groupBy(_._1).map { case (cid, qs) => (cid, qs.map(_._2)) }
+      qs.flatMap { q => probeCells(q._2, cents, probes).map(cid => (cid, q)) }
+        .groupBy(_._1).map { case (cid, probing) => (cid, probing.map(_._2)) }
     val qb = sp.sparkContext.broadcast(qProbes)
     val bb = sp.sparkContext.broadcast(bounds)
     // quantized candidate scan: probed cells only, codes only
@@ -1624,14 +1631,15 @@ object Similarity {
       cents: Array[(Long, Array[Float])],
       bounds: (Array[Double], Array[Double]), candMult: Int = 4): DataFrame = {
     val sp = corpus.sparkSession
-    val probedCells = collectQueryVectors(queries)
+    val qs = collectQueryVectors(queries)
+    val probedCells = qs
       .flatMap { case (_, qv) => probeCells(qv, cents, probes) }.distinct.toIndexedSeq
     val pruned = readCellIndex(sp, indexPath, probedCells)
     val dels = readCellTombstoneIds(sp, indexPath)
     val served =
       if (dels.isEmpty) pruned
       else pruned.filter(!col("vec_id").isInCollection(dels.toSeq.sorted))
-    ivfSq8KnnFromIndex(queries, served, corpus, k, probes, cents, bounds, candMult)
+    ivfSq8KnnFromIndex(qs, queries, served, corpus, k, probes, cents, bounds, candMult)
   }
 
   /** Build a NAVIGABLE-SMALL-WORLD-style neighbor graph over the corpus

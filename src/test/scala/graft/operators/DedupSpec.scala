@@ -18,8 +18,12 @@ class DedupSpec extends AnyFunSuite with BeforeAndAfterAll {
       .appName("dedup-spec")
       .config("spark.sql.shuffle.partitions", "2")
       .config("spark.ui.enabled", "false")
+      // ReleaseCheck counts stored blocks: the context cleaner must not
+      // free a leaked checkpoint's blocks before the check reads them
+      .config("spark.cleaner.referenceTracking", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    ReleaseCheck.track(spark.sparkContext)
   }
 
   override def afterAll(): Unit = if (spark != null) spark.stop()

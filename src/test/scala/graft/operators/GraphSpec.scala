@@ -16,8 +16,12 @@ class GraphSpec extends AnyFunSuite with BeforeAndAfterAll {
       .appName("graph-spec")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.ui.enabled", "false")
+      // ReleaseCheck counts stored blocks: the context cleaner must not
+      // free a leaked checkpoint's blocks before the check reads them
+      .config("spark.cleaner.referenceTracking", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    ReleaseCheck.track(spark.sparkContext)
   }
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
@@ -1298,5 +1302,21 @@ class GraphSpec extends AnyFunSuite with BeforeAndAfterAll {
     check("connectedComponents")(Graph.connectedComponents(g, "src", "dst"))
     check("minimumSpanningForest")(Graph.minimumSpanningForest(g, "src",
       "dst", "w", rounds = 3))
+  }
+
+  test("the release check counts stored blocks, so a driver GC cannot hide a leak") {
+    val sp = spark; import sp.implicits._
+    val g = Seq((1L, 2L, 3L), (2L, 3L, 1L), (3L, 1L, 2L), (3L, 4L, 4L),
+      (4L, 5L, 1L), (5L, 6L, 5L)).toDF("src", "dst", "w")
+    val sc = spark.sparkContext
+    def msf() = Graph.minimumSpanningForest(g, "src", "dst", "w", rounds = 3)
+    // a second forest dropped unreleased is a leaked checkpoint; the GC
+    // clears it from getPersistentRDDs' weak map, not from the block store
+    def leaky() = { val out = msf(); msf(); System.gc(); out }
+    val leaks = (1 to 3).map(_ => ReleaseCheck.leaked(sc)(leaky()))
+    assert(leaks.forall(_.size == 1), s"leaked checkpoints per call: $leaks")
+    assert(leaks.map(_.values.sum).distinct.size == 1,
+      s"identical calls read different leaked block counts: $leaks")
+    (1 to 3).foreach(_ => ReleaseCheck.check(sc, "minimumSpanningForest")(msf()))
   }
 }

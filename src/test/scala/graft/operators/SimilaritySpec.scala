@@ -26,8 +26,12 @@ class SimilaritySpec extends AnyFunSuite with BeforeAndAfterAll {
       .appName("similarity-spec")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.ui.enabled", "false")
+      // ReleaseCheck counts stored blocks: the context cleaner must not
+      // free a leaked checkpoint's blocks before the check reads them
+      .config("spark.cleaner.referenceTracking", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    ReleaseCheck.track(spark.sparkContext)
   }
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
@@ -379,6 +383,55 @@ class SimilaritySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows(storedResult) ===
       rows(Similarity.ivfSq8KnnFromIndex(q, index, e, 3, 1, cents, bounds)),
       "file-pruned stored index diverged from the full-index path")
+  }
+
+  test("a stored-index serve collects its query side once") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-cell-jobs").toString
+    val sc = spark.sparkContext
+    val e = emb
+    val q = e.filter(col("vec_id") < 5)
+    val bounds = Similarity.sq8Bounds(e, "embedding")
+    val cents = Similarity.kmeansCodebook(e, "vec_id", "embedding", 8)
+      .zipWithIndex.map { case (c, i) => (i.toLong, c) }
+    val path = s"$tmp/index"
+    Similarity.writeCellIndex(Similarity.ivfSq8Index(e, cents, bounds), path,
+      numFiles = 4)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def jobsOf[T](body: => T): (T, Int) = {
+      org.apache.spark.TestBus.drain(sc)
+      jobs.set(0)
+      val out = body
+      org.apache.spark.TestBus.drain(sc)
+      (out, jobs.get)
+    }
+    def rows(df: DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
+    sc.addSparkListener(listener)
+    try {
+      val (served, serveJobs) = jobsOf(rows(Similarity.ivfSq8KnnFromStoredIndex(
+        q, path, e, 3, 2, cents, bounds)))
+      // the same serve in parts: the probed cells' index read, then the
+      // in-memory serve over it, which collects the queries itself
+      val probed = Similarity.collectQueryVectors(q).flatMap { case (_, qv) =>
+        cents.map { case (cid, ce) => (cid, Similarity.cosineKernel(qv, ce)) }
+          .sortBy { case (cid, cs) => (-cs, cid) }.take(2).map(_._1)
+      }.distinct.toIndexedSeq
+      val (pruned, readJobs) = jobsOf {
+        assert(Similarity.readCellTombstoneIds(spark, path).isEmpty)
+        Similarity.readCellIndex(spark, path, probed)
+      }
+      val (inMemory, fromIndexJobs) = jobsOf(rows(Similarity.ivfSq8KnnFromIndex(
+        q, pruned, e, 3, 2, cents, bounds)))
+      assert(served === inMemory, "stored serve diverged from the in-memory serve")
+      // a second query collect inside the stored serve would add one job
+      assert(serveJobs === readJobs + fromIndexJobs,
+        s"stored serve ran $serveJobs jobs; index read $readJobs + serve $fromIndexJobs")
+    } finally sc.removeSparkListener(listener)
   }
 
   test("tombstone deletes serve immediately; compaction rewrites only the affected files") {

@@ -18,8 +18,12 @@ class TextPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       .appName("text-pipeline-spec")
       .config("spark.sql.shuffle.partitions", "2")
       .config("spark.ui.enabled", "false")
+      // ReleaseCheck counts stored blocks: the context cleaner must not
+      // free a leaked checkpoint's blocks before the check reads them
+      .config("spark.cleaner.referenceTracking", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    ReleaseCheck.track(spark.sparkContext)
   }
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
@@ -977,7 +981,7 @@ class TextPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       TextAnalysis.unigramLmVocab(docs, "text", vocabMulti = 8, emRounds = 1,
         initVocab = Some(init)))
     // the caller's initVocab frame is never released by the operator
-    assert(ReleaseCheck.heldBy(init).subsetOf(sc.getPersistentRDDs.keySet))
+    assert(ReleaseCheck.heldBy(init).subsetOf(ReleaseCheck.storedBlocks(sc).keySet))
     Iterate.release(init)
   }
 }
